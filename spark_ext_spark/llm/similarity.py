@@ -9,6 +9,15 @@
   shipped as literal arrays so the whole plan stays declarative);
   candidates come from a bucket equi-join (optionally multiprobe over
   1-bit-flipped buckets), then exact cosine re-rank within candidates.
+- ``fit_ivf_centroids_quantized`` + ``ivf_topk_deterministic``: IVF
+  ANN with a TRAINED coarse quantizer — a deterministic integer-lattice
+  Lloyd fit (fit once per corpus, pass ``centroids=`` to reuse it),
+  then each query probes its ``n_probes`` nearest cells with an exact
+  GEMM re-rank inside. Every stage before the final cosine is integer
+  arithmetic, so a SQL oracle replays fit and search bit-for-bit.
+- ``embedding_near_dups``: cosine near-duplicate pairs (exact sharded
+  GEMM or LSH blocking); ``quantize_embeddings``: int8 quantization
+  with its reconstruction-error profile.
 """
 
 from __future__ import annotations
@@ -22,9 +31,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 __all__ = ["cosine_similarity_col", "cosine_topk", "lsh_buckets",
-           "lsh_topk", "fit_ivf_centroids", "ivf_topk",
-           "fit_ivf_centroids_quantized", "ivf_topk_deterministic",
-           "embedding_near_dups", "drop_artifact_table"]
+           "lsh_topk", "fit_ivf_centroids_quantized",
+           "ivf_topk_deterministic", "embedding_near_dups",
+           "drop_artifact_table"]
 
 
 def _materialize_artifact(df: DataFrame, storage: str,
@@ -165,9 +174,7 @@ def _finite_vec(vec: Column, entry: str,
     return out
 
 
-def _nn_vectors(df: DataFrame, id_col: str, vec_col: str,
-                entry: str = "vector search",
-                dim: int | None = None) -> DataFrame:
+def _nn_vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """The one invariant every search entry point shares: null
     embeddings are excluded (they can match nothing, and a single null
     row reaching a GEMM group turns the batch ragged and kills the
@@ -178,7 +185,7 @@ def _nn_vectors(df: DataFrame, id_col: str, vec_col: str,
     return (df.filter(F.col(vec_col).isNotNull())
             .select(F.col(id_col).alias("vec_id"),
                     _finite_vec(F.col(vec_col).cast("array<double>"),
-                                entry, dim=dim).alias("vec")))
+                                "vector search").alias("vec")))
 
 
 def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int,
@@ -199,7 +206,8 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int,
     NOTHING materializes on the driver — the only driver-side job is a
     count() to size the shard grid, so the plan survives corpora that
     would OOM a broadcast. Query replication is S× (S = #shards):
-    inherent to exact search; use lsh_topk/ivf_topk when S gets large.
+    inherent to exact search; use lsh_topk/ivf_topk_deterministic when
+    S gets large.
 
     method="expr": all-JVM crossJoin + zip_with/aggregate + window —
     kept as the declarative reference plan (good when M is tiny).
@@ -692,96 +700,6 @@ def _grouped_candidate_topk(both: DataFrame, group_col: str, k: int,
             .select("query_id", "neighbor_id", "sim", "rank"))
 
 
-def fit_ivf_centroids(df: DataFrame, n_centroids: int = 16, seed: int = 42,
-                      max_iter: int = 10,
-                      vec_col: str = "embedding") -> list[list[float]]:
-    """Train the IVF coarse quantizer (distributed MLlib KMeans) and
-    return the centroid matrix as plain lists — the only driver-side
-    artifact (n_centroids × dim floats). Fit ONCE per corpus and reuse
-    across queries: at scale the quantizer is a stored model, not a
-    per-query job."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    # null embeddings excluded here too (finding of the round-7
-    # self-review: array_to_vector NPEs on a null array, so one bad
-    # row killed the MLlib fit while every other entry point
-    # filtered); non-finite/ragged corpora fail by the _finite_vec
-    # name instead of an opaque MLlib/Arrow error (or silently fitting
-    # NaN centroids) — round-10 self-review
-    feat = (df.filter(F.col(vec_col).isNotNull())
-            .select(_finite_vec(F.col(vec_col).cast("array<double>"),
-                                "fit_ivf_centroids",
-                                dim=_infer_dim(df, vec_col))
-                    .alias("vec"))
-            .withColumn("__fv", array_to_vector("vec")).cache())
-    model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter,
-                   initMode="random", featuresCol="__fv").fit(feat)
-    feat.unpersist()
-    return [[float(x) for x in c] for c in model.clusterCenters()]
-
-
-def ivf_topk(df: DataFrame, k: int, n_centroids: int = 16,
-             n_probes: int = 3, seed: int = 42, max_iter: int = 10,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             centroids: list[list[float]] | None = None,
-             shard_rows: int = 16384,
-             storage: str = "cache",
-             artifact_table: str | None = None,
-             persisted_out: list | None = None,
-             check_unique_ids: bool = True) -> DataFrame:
-    """IVF ANN with a TRAINED coarse quantizer (vs lsh_topk's
-    data-oblivious hyperplanes): distributed k-means learns
-    ``n_centroids`` cells, the corpus becomes inverted lists (one cell
-    per vector), and each query probes its ``n_probes`` nearest cells
-    with an exact GEMM re-rank inside. Recall tracks how well cells
-    capture the data distribution — better than random hyperplanes on
-    clustered embeddings at the same candidate budget.
-
-    Scale: training is pyspark.ml KMeans (distributed Lloyd) via
-    :func:`fit_ivf_centroids` — pass ``centroids`` to reuse a fitted
-    quantizer instead of re-fitting per query (the production shape).
-    The centroid matrix (n_centroids × dim) is the only driver artifact
-    and re-enters the plan as literal arrays, so BOTH cell assignment
-    and probe selection are pure JVM expressions (array of (dist, cell)
-    structs → array_sort → slice). Candidate generation is an equi-join
-    on cell id; per-cell work is one GEMM. n_probes trades recall for
-    candidate count."""
-    if centroids is None:
-        centroids = fit_ivf_centroids(df, n_centroids, seed, max_iter,
-                                      vec_col)
-
-    emb = _nn_vectors(df, id_col, vec_col, entry="ivf_topk",
-                      dim=len(centroids[0]))
-    dist_structs = []
-    for i, c in enumerate(centroids):
-        row = F.lit([float(x) for x in c])
-        d2 = F.aggregate(F.zip_with("vec", row, lambda x, y: (x - y) * (x - y)),
-                         F.lit(0.0), lambda acc, z: acc + z)
-        dist_structs.append(F.struct(d2.alias("d"), F.lit(i).alias("cell")))
-    cells_by_dist = F.array_sort(F.array(*dist_structs))
-    # materialized because the interpreted n_centroids × dim distance
-    # fold is read TWICE per action — once by the candidate explode,
-    # once by the block grid's bucket-sizing aggregate — and
-    # unmaterialized each reader re-evaluates it (measured 2-3×
-    # slower). At 100 TB pass storage="table": the assignment is
-    # written once to the warehouse and read from disk by both
-    # branches, independent of executor cache residency; drop it with
-    # drop_artifact_table when the run ends.
-    assigned = _materialize_artifact(
-        emb.withColumn("__cbd", cells_by_dist),
-        storage, artifact_table, persisted_out)
-    if check_unique_ids:
-        _assert_unique_ids(assigned, "ivf_topk")
-    # nearest cell (= the member cell) is probes[0] — _explode_roles'
-    # first-element contract; __cbd referenced exactly once
-    probes = F.transform(F.slice("__cbd", 1, n_probes),
-                         lambda s: s["cell"])
-    both = _explode_roles(assigned, probes, "cell")
-    return _grouped_candidate_topk(both, "cell", k,
-                                   shard_rows=shard_rows)
-
-
 IVF_QUANT_SCALE = 1_000_000
 
 
@@ -819,21 +737,21 @@ def fit_ivf_centroids_quantized(df: DataFrame, n_centroids: int = 16,
                                 n_iter: int = 3, id_col: str = "vec_id",
                                 vec_col: str = "embedding",
                                 dim: int | None = None) -> list[list[int]]:
-    """Deterministic distributed Lloyd on integer-quantized vectors.
-
-    Unlike :func:`fit_ivf_centroids` (MLlib KMeans — the production
-    fit when exact reproducibility across engines is not needed), this
-    quantizer is cross-engine replayable: vectors land on an integer
-    lattice (floor(x*1e6)), initial centroids are the ``n_centroids``
-    smallest ids, and each Lloyd step is (integer argmin assignment,
-    exact integer per-dim sums, floor-mean). Integer sums are
-    order-independent, so Spark's partial aggregation and any SQL
-    engine produce identical centroids — see ANN_IVF_TOPK_SQL, which
-    re-derives them via unrolled CTEs.
+    """Deterministic distributed Lloyd on integer-quantized vectors —
+    the IVF coarse quantizer. It is cross-engine replayable: vectors
+    land on an integer lattice (floor(x*1e6)), initial centroids are
+    the ``n_centroids`` smallest ids, and each Lloyd step is (integer
+    argmin assignment, exact integer per-dim sums, floor-mean). Integer
+    sums are order-independent, so Spark's partial aggregation and any
+    SQL engine produce identical centroids — see ANN_IVF_TOPK_SQL,
+    which re-derives them via unrolled CTEs.
 
     Scale shape: each iteration is ONE distributed aggregation
     (groupBy(cell) with dim+1 exact integer sums); the only driver
-    artifact is the n_centroids × dim centroid matrix.
+    artifact is the n_centroids × dim centroid matrix (integers on the
+    ``IVF_QUANT_SCALE`` lattice). Fit ONCE per corpus and pass the
+    result as ``centroids=`` to :func:`ivf_topk_deterministic`: at
+    scale the quantizer is a stored model, not a per-query job.
     """
     if dim is None:
         dim = _infer_dim(df, vec_col)
@@ -882,13 +800,23 @@ def ivf_topk_deterministic(df: DataFrame, k: int, n_centroids: int = 16,
                            artifact_table: str | None = None,
                            persisted_out: list | None = None,
                            check_unique_ids: bool = True) -> DataFrame:
-    """IVF ANN over the quantized-Lloyd coarse quantizer — identical
-    candidate generation to :func:`ivf_topk` (probe ``n_probes``
-    nearest cells, exact GEMM re-rank inside), but every stage up to
-    the final cosine is integer arithmetic, so a SQL oracle can replay
-    assignment, probe selection, and the candidate set exactly.
-    Similarities are rounded to ``round_to`` decimals BEFORE ranking
-    (both engines) to pin tie-breaks."""
+    """IVF ANN over the quantized-Lloyd coarse quantizer (vs
+    lsh_topk's data-oblivious hyperplanes): the corpus becomes inverted
+    lists (one cell per vector), and each query probes its
+    ``n_probes`` nearest cells with an exact GEMM re-rank inside.
+    Cells follow the data distribution, so recall per candidate beats
+    random hyperplanes on clustered embeddings; ``n_probes`` trades
+    recall for candidate count.
+
+    Every stage up to the final cosine is integer arithmetic, so a SQL
+    oracle can replay assignment, probe selection, and the candidate
+    set exactly. Similarities are rounded to ``round_to`` decimals
+    BEFORE ranking (both engines) to pin tie-breaks; ``round_to=None``
+    keeps them unrounded. The centroid matrix (from
+    :func:`fit_ivf_centroids_quantized`, fitted here when
+    ``centroids`` is omitted) re-enters the plan as literal arrays, so
+    cell assignment and probe selection are pure JVM expressions and
+    candidate generation is an equi-join on cell id."""
     if centroids is None:
         centroids = fit_ivf_centroids_quantized(
             df, n_centroids, n_iter, id_col, vec_col)
@@ -901,9 +829,11 @@ def ivf_topk_deterministic(df: DataFrame, k: int, n_centroids: int = 16,
                    .alias("qv")))
     cbd = _ivf_cells_by_dist(centroids)
     # materialized: the explode branch and the block grid's sizing
-    # aggregate both read the interpreted distance fold (see
-    # ivf_topk's lifecycle note; storage="table" for multi-query /
-    # 100 TB runs, persisted_out for explicit cache release)
+    # aggregate both read the interpreted n_centroids × dim distance
+    # fold, and unmaterialized each reader re-evaluates it (measured
+    # 2-3× slower). storage="table" writes the assignment once to the
+    # warehouse for multi-query / 100 TB runs (drop it with
+    # drop_artifact_table); persisted_out gives explicit cache release
     emb = _materialize_artifact(
         emb.withColumn("__cbd", cbd).drop("qv"),
         storage, artifact_table, persisted_out)

@@ -93,13 +93,6 @@ class _GatherEncoderParams(Params):
                           "partitions (operators/prefix.py) for huge "
                           "dictionaries",
                           typeConverter=TypeConverters.toInt)
-    encodeMethod = Param(Params._dummy(), "encodeMethod",
-                         "vector encode path: 'udf' (row-at-a-time, "
-                         "SparseVector output, any dictionary width) | "
-                         "'arrow' (Arrow-batched dense intermediate -> "
-                         "DenseVector; faster for bounded dictionaries, "
-                         "avoid for very wide ones)",
-                         typeConverter=TypeConverters.toString)
 
     def _validate_schema(self, schema: StructType) -> StructType:
         """GatherEncoder.scala:52-80: input must be array<struct>, key
@@ -138,8 +131,7 @@ class GatherEncoder(Estimator, _GatherEncoderParams,
         self._setDefault(transformation="top", support=0.1, cover=100.0,
                          allOther=False, keepInputCol=True,
                          failOnEmptyKeys=True, excludeKeys=[],
-                         maxKeys=1 << 20, fitPartitions=0,
-                         encodeMethod="udf")
+                         maxKeys=1 << 20, fitPartitions=0)
         kwargs = self._input_kwargs
         if kwargs.get("excludeKeys") is not None:
             kwargs["excludeKeys"] = list(kwargs["excludeKeys"])
@@ -280,13 +272,12 @@ class GatherEncoderModel(Model, _GatherEncoderParams,
     - empty dictionary and allOther=false → size-0 dense vector;
     - empty dictionary + failOnEmptyKeys → error at transform.
 
-    Null vs NaN values: on every path a null VALUE unboxes to 0.0
-    (GatherEncoder.scala:345-355). A genuine NaN value is preserved by
-    ``encodeMethod="udf"`` (reference parity — NaN lands in the slot,
-    or poisons the all-other sum); ``encodeMethod="arrow"`` CANNOT
-    distinguish NaN from null over Arrow transport and conflates both
-    to 0.0 — a documented limitation, so route NaN-bearing inputs to
-    the udf path.
+    Null vs NaN values: a null VALUE unboxes to 0.0
+    (GatherEncoder.scala:345-355), while a genuine NaN value is
+    preserved (reference parity — NaN lands in the slot, or poisons
+    the all-other sum). The encode is a row-at-a-time udf so that
+    this distinction survives: Arrow transport would conflate NaN
+    with null.
     """
 
     modelKeys = Param(Params._dummy(), "modelKeys",
@@ -298,8 +289,7 @@ class GatherEncoderModel(Model, _GatherEncoderParams,
         self._setDefault(transformation="top", support=0.1, cover=100.0,
                          allOther=True, keepInputCol=True,
                          failOnEmptyKeys=True, excludeKeys=[],
-                         maxKeys=1 << 20, modelKeys=[],
-                         encodeMethod="udf")
+                         maxKeys=1 << 20, modelKeys=[])
         if keys is not None:
             self._set(modelKeys=list(keys))
 
@@ -335,84 +325,32 @@ class GatherEncoderModel(Model, _GatherEncoderParams,
 
         sc = dataset.sparkSession.sparkContext
         key_index_bc = sc.broadcast({k: i for i, k in enumerate(self.keys)})
-        method = self.getOrDefault(self.encodeMethod)
 
-        if method == "arrow":
-            # Arrow-batched path: the whole column batch crosses the
-            # JVM↔Python boundary once (vs one pickled Row per call for
-            # F.udf); output is a dense float array converted JVM-side
-            # with array_to_vector (Arrow can't carry VectorUDT).
-            # Value-identical to the udf path (test-pinned); vector
-            # STORAGE differs (DenseVector), so keep 'udf' for very
-            # wide dictionaries where sparse output matters.
-            import numpy as np
-            import pandas as pd
-            from pyspark.ml.functions import array_to_vector
+        @F.udf(returnType=VectorUDT())
+        def encode(keys, values):
+            if feature_size == 0:
+                return SparseVector(0, {})
+            if keys is None or values is None:
+                return SparseVector(feature_size, {})
+            key_index = key_index_bc.value
+            elements: dict[int, float] = {}
+            for k, v in zip(keys, values):
+                # reference parity: only a null value unboxes to 0.0
+                # (GatherEncoder.scala:345-355, null.asInstanceOf
+                # [Double]); a genuine NaN value is PRESERVED — written
+                # into the slot, or summed (NaN-poisoning, as the
+                # reference would) into the all-other slot.
+                v = 0.0 if v is None else v
+                idx = key_index.get(k)
+                if idx is not None:
+                    elements[idx] = v            # last value wins
+                elif all_other:
+                    elements[n_keys] = elements.get(n_keys, 0.0) + v
+            return SparseVector(feature_size, elements)
 
-            # no type hints: PEP-563 string annotations (module-level
-            # future import) are unresolvable by pyspark's hint
-            # inspection — the returnType string is authoritative
-            @F.pandas_udf("array<double>")
-            def encode_arrow(keys, values):
-                key_index = key_index_bc.value
-                out_arrs = []
-                for ks, vs in zip(keys, values):
-                    arr = np.zeros(feature_size)
-                    if ks is not None and vs is not None:
-                        for k, v in zip(ks, vs):
-                            # null elements arrive from Arrow as NaN (or
-                            # None under object dtype); the reference
-                            # unboxes null to 0.0 (GatherEncoder.scala:
-                            # 345-355, null.asInstanceOf[Double]).
-                            # KNOWN LIMITATION: Arrow transport cannot
-                            # distinguish a genuine NaN value from null,
-                            # so this path conflates both to 0.0. The
-                            # reference PRESERVES genuine NaN — use
-                            # encodeMethod="udf" for NaN-bearing inputs
-                            # (documented in the class docstring).
-                            v = 0.0 if pd.isna(v) else float(v)
-                            idx = key_index.get(k)
-                            if idx is not None:
-                                arr[idx] = v     # last value wins
-                            elif all_other:
-                                arr[n_keys] += v
-                    out_arrs.append(arr)
-                return pd.Series(out_arrs)
-
-            raw = array_to_vector(encode_arrow(
-                F.col(f"{in_col}.{key}"),
-                F.col(f"{in_col}.{value}").cast("array<double>")))
-        elif method == "udf":
-            @F.udf(returnType=VectorUDT())
-            def encode(keys, values):
-                if feature_size == 0:
-                    return SparseVector(0, {})
-                if keys is None or values is None:
-                    return SparseVector(feature_size, {})
-                key_index = key_index_bc.value
-                elements: dict[int, float] = {}
-                for k, v in zip(keys, values):
-                    # reference parity: only a null value unboxes to
-                    # 0.0 (GatherEncoder.scala:345-355,
-                    # null.asInstanceOf[Double]); a genuine NaN value
-                    # is PRESERVED — written into the slot, or summed
-                    # (NaN-poisoning, as the reference would) into the
-                    # all-other slot. The arrow path cannot represent
-                    # this distinction (Arrow nulls and NaN collapse),
-                    # so NaN-bearing inputs belong on this path.
-                    v = 0.0 if v is None else v
-                    idx = key_index.get(k)
-                    if idx is not None:
-                        elements[idx] = v            # last value wins
-                    elif all_other:
-                        elements[n_keys] = elements.get(n_keys, 0.0) + v
-                return SparseVector(feature_size, elements)
-
-            raw = encode(
-                F.col(f"{in_col}.{key}"),
-                F.col(f"{in_col}.{value}").cast("array<double>"))
-        else:
-            raise ValueError(f"unknown encodeMethod: {method!r}")
+        raw = encode(
+            F.col(f"{in_col}.{key}"),
+            F.col(f"{in_col}.{value}").cast("array<double>"))
 
         out = self.getOrDefault(self.outputCol)
         encoded = raw.alias(out, metadata=self._output_metadata())

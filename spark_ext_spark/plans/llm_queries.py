@@ -504,30 +504,23 @@ SELECT query_id, neighbor_id, sim, rank FROM ranked WHERE rank <= {k}
 ANN_LSH_TOPK_SQL = _ann_lsh_oracle()
 
 
-_IVF_CENTROIDS: dict[str, list[list[int]]] = {}
-
-
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with a trained coarse quantizer — oracle-checked: the
     quantized-Lloyd fit (integer lattice, deterministic init from the
     n_centroids smallest ids, exact integer sums) produces centroids a
     SQL engine re-derives bit-for-bit, so ANN_IVF_TOPK_SQL replays the
     fit, cell assignment, probe selection, and candidate re-rank (see
-    similarity.fit_ivf_centroids_quantized). The MLlib-KMeans variant
-    (similarity.ivf_topk) stays the float-centroid production path and
-    keeps its recall/probe-tradeoff tests. The fitted quantizer is
-    cached per corpus: production IVF fits once and serves many
-    queries, so repeat invocations must not re-run Lloyd."""
+    similarity.fit_ivf_centroids_quantized). This is the library's one
+    IVF path. Each call fits afresh, so a timed run of this query
+    measures fit plus search, just as the oracle replays both."""
     emb = load(spark, sf_dir, "embeddings")
-    if sf_dir not in _IVF_CENTROIDS:
-        # dim=64 (testdata embeddings at every SF, the oracle's
-        # constant) skips the fit's _infer_dim first() probe job —
-        # see ann_lsh_topk
-        _IVF_CENTROIDS[sf_dir] = similarity.fit_ivf_centroids_quantized(
-            emb, n_centroids=16, n_iter=3, dim=64)
+    # dim=64 (testdata embeddings at every SF, the oracle's constant)
+    # skips the fit's _infer_dim first() probe job — see ann_lsh_topk
+    centroids = similarity.fit_ivf_centroids_quantized(
+        emb, n_centroids=16, n_iter=3, dim=64)
     return similarity.ivf_topk_deterministic(
         emb, k=5, n_centroids=16, n_probes=3, round_to=4,
-        centroids=_IVF_CENTROIDS[sf_dir])
+        centroids=centroids)
 
 
 def _ann_ivf_oracle(dim: int = 64, n_centroids: int = 16, n_iter: int = 3,

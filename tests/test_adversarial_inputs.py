@@ -403,14 +403,16 @@ def test_duplicate_ids_raise_on_approximate_paths(spark):
     duplicate vectors here are near-opposite, maximizing the odds of
     disjoint buckets — the exact case the local check misses."""
     from spark_ext_spark.llm.similarity import (embedding_near_dups,
-                                                ivf_topk, lsh_topk)
+                                                ivf_topk_deterministic,
+                                                lsh_topk)
     df = spark.createDataFrame(
         [(1, [1.0, 2.0]), (2, [0.5, 0.1]), (2, [-0.5, -0.1]),
          (3, [0.2, 0.9])],
         "vec_id long, embedding array<double>")
     for attempt in (
         lambda: lsh_topk(df, k=2),
-        lambda: ivf_topk(df, k=2, centroids=[[1.0, 0.0], [-1.0, 0.0]]),
+        lambda: ivf_topk_deterministic(
+            df, k=2, centroids=[[1_000_000, 0], [-1_000_000, 0]]),
         lambda: embedding_near_dups(df, threshold=0.5, method="lsh"),
     ):
         with pytest.raises(Exception, match="unique and non-null"):

@@ -20,7 +20,8 @@ from pyspark.sql import functions as F
 
 from spark_ext_spark.llm.similarity import (drop_artifact_table,
                                             embedding_near_dups,
-                                            fit_ivf_centroids, ivf_topk)
+                                            fit_ivf_centroids_quantized,
+                                            ivf_topk_deterministic)
 
 SF = "/root/testdata/sf0.1"
 
@@ -44,16 +45,18 @@ def test_table_mode_lifecycle_at_sf01(spark):
     emb = (spark.read.parquet(f"{SF}/embeddings.parquet")
            .select("vec_id", "embedding"))
     # production shape: quantizer fitted ONCE, reused across queries
-    centroids = fit_ivf_centroids(emb, n_centroids=8, seed=7)
+    centroids = fit_ivf_centroids_quantized(emb, n_centroids=8, dim=64)
 
     cached_held: list = []
-    ivf_cache = ivf_topk(emb, k=5, centroids=centroids, n_probes=2,
-                         persisted_out=cached_held)
+    ivf_cache = ivf_topk_deterministic(emb, k=5, centroids=centroids,
+                                       n_probes=2, round_to=None,
+                                       persisted_out=cached_held)
     ivf_cache_rows = _topk_rows(ivf_cache)
 
     tname = "t_lifecycle_ivf_cells"
-    ivf_table = ivf_topk(emb, k=5, centroids=centroids, n_probes=2,
-                         storage="table", artifact_table=tname)
+    ivf_table = ivf_topk_deterministic(emb, k=5, centroids=centroids,
+                                       n_probes=2, round_to=None,
+                                       storage="table", artifact_table=tname)
     # artifact is a real warehouse table between queries: visible in
     # the catalog AND as parquet on disk, so a second query (or a
     # second session) reads it without recomputing the assignment
@@ -66,8 +69,9 @@ def test_table_mode_lifecycle_at_sf01(spark):
     # stable across the overwrite. A consumer wanting re-read-without-
     # recompute reads spark.table(tname) directly (exercised by
     # test_table_mode_artifact_readable_without_source_cache below).
-    again = ivf_topk(emb, k=5, centroids=centroids, n_probes=2,
-                     storage="table", artifact_table=tname)
+    again = ivf_topk_deterministic(emb, k=5, centroids=centroids,
+                                   n_probes=2, round_to=None,
+                                   storage="table", artifact_table=tname)
     assert _topk_rows(again) == ivf_cache_rows
 
     lsh_cache = embedding_near_dups(emb, threshold=0.4, method="lsh",
@@ -98,10 +102,11 @@ def test_table_mode_artifact_readable_without_source_cache(spark):
     multi-session 100 TB run relies on)."""
     emb = (spark.read.parquet(f"{SF}/embeddings.parquet")
            .select("vec_id", "embedding").limit(2000))
-    centroids = fit_ivf_centroids(emb, n_centroids=4, seed=3)
+    centroids = fit_ivf_centroids_quantized(emb, n_centroids=4, dim=64)
     tname = "t_lifecycle_selfsufficient"
-    out = ivf_topk(emb, k=3, centroids=centroids, n_probes=2,
-                   storage="table", artifact_table=tname)
+    out = ivf_topk_deterministic(emb, k=3, centroids=centroids, n_probes=2,
+                                 round_to=None, storage="table",
+                                 artifact_table=tname)
     expected = _topk_rows(out)
     spark.catalog.clearCache()
     t = spark.table(tname)
@@ -110,7 +115,8 @@ def test_table_mode_artifact_readable_without_source_cache(spark):
     assert (t.groupBy("vec_id").count()
              .filter(F.col("count") > 1).count()) == 0
     # and the query still reproduces off the warehouse copy
-    again = ivf_topk(emb, k=3, centroids=centroids, n_probes=2,
-                     storage="table", artifact_table=tname)
+    again = ivf_topk_deterministic(emb, k=3, centroids=centroids,
+                                   n_probes=2, round_to=None,
+                                   storage="table", artifact_table=tname)
     assert _topk_rows(again) == expected
     drop_artifact_table(spark, tname)

@@ -175,30 +175,6 @@ def test_encode_with_all_other(model_df):
         assert fs[c].size == 4 and list(fs[c].indices) == []
 
 
-def test_encode_arrow_method_value_identical(model_df):
-    """encodeMethod='arrow' (Arrow batch + dense intermediate) must be
-    VALUE-identical to the default 'udf' path on every contract shape:
-    known keys, last-wins duplicates via transform order, all-other
-    sums, empty/null arrays, empty dictionary."""
-    for kw in (dict(allOther=False), dict(allOther=True),
-               dict(allOther=True, keyCol="site_id")):
-        keys = SITE_IDS if kw.get("keyCol") == "site_id" else SITES
-        udf_fs = _features(_model(keys, encodeMethod="udf", **kw), model_df)
-        arr_fs = _features(_model(keys, encodeMethod="arrow", **kw),
-                           model_df)
-        assert set(udf_fs) == set(arr_fs)
-        for c, v in udf_fs.items():
-            assert list(arr_fs[c].toArray()) == list(v.toArray()), (kw, c)
-    # empty dictionary + allOther=False → size-0 vector in both paths
-    e_udf = _features(_model([], failOnEmptyKeys=False, allOther=False,
-                             encodeMethod="udf"), model_df)
-    e_arr = _features(_model([], failOnEmptyKeys=False, allOther=False,
-                             encodeMethod="arrow"), model_df)
-    assert all(e_arr[c].size == 0 and e_udf[c].size == 0 for c in e_arr)
-    with pytest.raises(ValueError):
-        _features(_model(SITES, encodeMethod="nope"), model_df)
-
-
 def test_remove_input_col(model_df):
     out = _model(SITES, keepInputCol=False).transform(model_df)
     assert len(out.columns) == len(model_df.columns)
@@ -274,8 +250,7 @@ def test_duplicate_keys_last_wins_both_paths(spark):
 def test_null_values_unbox_to_zero_both_encode_paths(spark):
     """Reference parity (GatherEncoder.scala:345-355): a null VALUE in
     the gathered array unboxes to 0.0 — in the fitted slot and in the
-    all-other sum alike. Previously the udf path wrote NaN into the
-    slot and the arrow path crashed outright on a null element."""
+    all-other sum alike."""
     df = spark.createDataFrame(
         [(1, [("a", 1.0), ("zz", None), ("a", None)]),
          (2, [("a", 3.0), ("zz", 2.0)])],
@@ -285,19 +260,15 @@ def test_null_values_unbox_to_zero_both_encode_paths(spark):
            allOther=True)
     expected = {1: [0.0, 0.0],   # last 'a' is null → 0.0; all-other null → 0.0
                 2: [3.0, 2.0]}
-    for method in ("udf", "arrow"):
-        m._set(encodeMethod=method)
-        got = {r["pk"]: list(r["f"].toArray())
-               for r in m.transform(df).collect()}
-        assert got == expected, method
+    got = {r["pk"]: list(r["f"].toArray())
+           for r in m.transform(df).collect()}
+    assert got == expected
 
 
 def test_nan_values_preserved_on_udf_path(spark):
     """Reference parity: GatherEncoder.scala:345-355 unboxes only NULL
     to 0.0 — a genuine NaN VALUE is preserved, landing in the fitted
-    slot and poisoning the all-other sum. Only the udf path can honor
-    this (Arrow transport conflates NaN with null — documented
-    limitation in the class docstring, where NaN→0.0)."""
+    slot and poisoning the all-other sum."""
     import math
     df = spark.createDataFrame(
         [(1, [("a", float("nan")), ("zz", 2.0)]),
@@ -305,15 +276,8 @@ def test_nan_values_preserved_on_udf_path(spark):
         "pk long, g array<struct<key string, value double>>")
     m = GatherEncoderModel(keys=["a"])
     m._set(inputCol="g", outputCol="f", keyCol="key", valueCol="value",
-           allOther=True, encodeMethod="udf")
+           allOther=True)
     got = {r["pk"]: list(r["f"].toArray())
            for r in m.transform(df).collect()}
     assert math.isnan(got[1][0]) and got[1][1] == 2.0   # NaN in slot
     assert got[2][0] == 1.0 and math.isnan(got[2][1])   # NaN poisons sum
-
-    # arrow path: same inputs, NaN conflated to 0.0 (the documented
-    # divergence — asserted so a silent behavior change is visible)
-    m._set(encodeMethod="arrow")
-    got = {r["pk"]: list(r["f"].toArray())
-           for r in m.transform(df).collect()}
-    assert got == {1: [0.0, 2.0], 2: [1.0, 3.0]}

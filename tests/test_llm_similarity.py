@@ -97,10 +97,11 @@ def test_lsh_topk_recall_against_exact(vecs, vecs_np):
 
 
 def test_ivf_topk_recall_against_exact(vecs, vecs_np):
-    from spark_ext_spark.llm.similarity import ivf_topk
+    from spark_ext_spark.llm.similarity import ivf_topk_deterministic
     exact = _numpy_topk(vecs_np, 3)
     approx = {}
-    for r in ivf_topk(vecs, k=3, n_centroids=8, n_probes=3).collect():
+    for r in ivf_topk_deterministic(vecs, k=3, n_centroids=8, n_probes=3,
+                                    round_to=None).collect():
         approx.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     hits = total = 0
     for q in range(N):
@@ -116,13 +117,14 @@ def test_ivf_topk_recall_against_exact(vecs, vecs_np):
 
 
 def test_ivf_probe_count_trades_recall(vecs, vecs_np):
-    from spark_ext_spark.llm.similarity import ivf_topk
+    from spark_ext_spark.llm.similarity import ivf_topk_deterministic
     exact = _numpy_topk(vecs_np, 3)
 
     def recall(n_probes):
         approx = {}
-        for r in ivf_topk(vecs, k=3, n_centroids=8,
-                          n_probes=n_probes).collect():
+        for r in ivf_topk_deterministic(vecs, k=3, n_centroids=8,
+                                        n_probes=n_probes,
+                                        round_to=None).collect():
             approx.setdefault(r["query_id"], set()).add(r["neighbor_id"])
         hits = total = 0
         for q in range(N):

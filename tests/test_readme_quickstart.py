@@ -64,7 +64,7 @@ def test_readme_quickstart_pipeline(spark):
 def test_readme_llm_oneliners(spark):
     """The four LLM-surface calls quoted in the README, as written."""
     from spark_ext_spark.llm.dedup import minhash_lsh_pairs
-    from spark_ext_spark.llm.similarity import ivf_topk
+    from spark_ext_spark.llm.similarity import ivf_topk_deterministic
     from spark_ext_spark.llm.splits import temperature_mix_sample
     from spark_ext_spark.llm.text import repeated_ngram_spans
 
@@ -74,7 +74,7 @@ def test_readme_llm_oneliners(spark):
     pairs = minhash_lsh_pairs(docs, "doc_id", "text")
     assert {"doc_a", "doc_b"} <= set(pairs.columns)
 
-    topk = ivf_topk(emb, k=5)
+    topk = ivf_topk_deterministic(emb, k=5)
     assert topk.count() > 0
     assert {"query_id", "neighbor_id"} <= set(topk.columns) or \
         len(topk.columns) >= 3  # (query, neighbor, score) shape

@@ -1,7 +1,8 @@
 """Measure ANN recall@k vs the exact brute-force top-k on the REAL
-embeddings table — the number a user choosing lsh_topk/ivf_topk over
-cosine_topk needs. Prints one markdown table row per setting; the
-committed results live in SCALE.md ("ANN recall vs exact").
+embeddings table — the number a user choosing lsh_topk or
+ivf_topk_deterministic over cosine_topk needs. Prints one markdown
+table row per setting; the committed results live in SCALE.md ("ANN
+recall vs exact").
 
 Usage: python tools/ann_recall.py [sf_dir]   (default sf0.1)
 """
@@ -60,10 +61,11 @@ def main() -> None:
     # this shared fit, for LSH (whose projection build is cheap and
     # inside each run) and IVF alike via the amortization note.
     t0 = time.time()
-    centroids = similarity.fit_ivf_centroids(emb, n_centroids=16)
+    centroids = similarity.fit_ivf_centroids_quantized(
+        emb, n_centroids=16, dim=64)
     t_fit = time.time() - t0
-    print(f"| ivf | shared kmeans fit, 16 cells (once per corpus) | "
-          f"- | {t_fit:.1f} |")
+    print(f"| ivf | shared quantized-Lloyd fit, 16 cells (once per "
+          f"corpus) | - | {t_fit:.1f} |")
     for label, build in [
         ("lsh n_planes=8 multiprobe=off",
          lambda held: similarity.lsh_topk(emb, k=K, n_planes=8,
@@ -81,22 +83,12 @@ def main() -> None:
          lambda held: similarity.lsh_topk(emb, k=K, n_planes=4,
                                           multiprobe=True,
                                           persisted_out=held)),
-        ("ivf 16 cells n_probes=1",
-         lambda held: similarity.ivf_topk(emb, k=K, n_centroids=16,
-                                          n_probes=1, centroids=centroids,
-                                          persisted_out=held)),
-        ("ivf 16 cells n_probes=3",
-         lambda held: similarity.ivf_topk(emb, k=K, n_centroids=16,
-                                          n_probes=3, centroids=centroids,
-                                          persisted_out=held)),
-        ("ivf 16 cells n_probes=5",
-         lambda held: similarity.ivf_topk(emb, k=K, n_centroids=16,
-                                          n_probes=5, centroids=centroids,
-                                          persisted_out=held)),
-        ("ivf 16 cells n_probes=8",
-         lambda held: similarity.ivf_topk(emb, k=K, n_centroids=16,
-                                          n_probes=8, centroids=centroids,
-                                          persisted_out=held)),
+    ] + [
+        (f"ivf 16 cells n_probes={p}",
+         lambda held, p=p: similarity.ivf_topk_deterministic(
+             emb, k=K, n_centroids=16, n_probes=p, round_to=None,
+             centroids=centroids, persisted_out=held))
+        for p in (1, 3, 5, 8)
     ]:
         held: list = []
         t0 = time.time()
