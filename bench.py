@@ -106,7 +106,8 @@ def _detail_path() -> str:
 def main() -> None:
     detail_path = _detail_path()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     # tolerate any directory name: 'sf' not followed by a number (e.g.
     # /data/transfer) must not crash the bench at startup
     m = re.search(r"sf([0-9.]+)/?$", sf_dir)

@@ -31,8 +31,13 @@ Pipeline (reference :156-221, re-expressed declaratively):
    per-partition totals → driver scanLeft → offset add). The numBins
    down-sampling's global row_number goes through the same chooser;
 4. per-threshold confusion matrix columns: TP=cumPos, FP=cumNeg,
-   FN=totPos-cumPos, TN=totNeg-cumNeg; totals joined in via a
-   broadcast 1-row aggregate (no driver collect, stays lazy).
+   FN=totPos-cumPos, TN=totNeg-cumNeg. On the window path the totals
+   are sums over an unbounded frame of the SAME score-descending
+   window, so Catalyst evaluates them in the Window operator that
+   yields TP/FP (the reference likewise builds cumulative counts and
+   totals in one pass, :198-216). On the prefix-sum path they are
+   joined in via a broadcast 1-row aggregate. Neither collects to the
+   driver; the table stays lazy.
 
 Metric definitions (Spark 1.5 binary package + reference computers):
 precision = TP/(TP+FP) (1.0 when empty), recall/TPR = TP/P (0.0 when
@@ -88,8 +93,7 @@ class BinaryModelMetrics:
         counts sum associatively), so the choice never changes
         results — asserted on 1e6 distinct scores in
         tests/test_evaluation.py."""
-        if (self.prefix_threshold is not None and self._n_cum is not None
-                and self._n_cum > self.prefix_threshold):
+        if self._prefix_path():
             from spark_ext_spark.operators.prefix import (
                 partitioned_cumulative_sums)
             return partitioned_cumulative_sums(
@@ -101,6 +105,10 @@ class BinaryModelMetrics:
         for name, c in values.items():
             out = out.withColumn(name, F.sum(c).over(w))
         return out
+
+    def _prefix_path(self) -> bool:
+        return (self.prefix_threshold is not None and self._n_cum is not None
+                and self._n_cum > self.prefix_threshold)
 
     def _sized(self, counts: DataFrame) -> DataFrame:
         """Persist the compacted table and take its distinct-score
@@ -152,13 +160,22 @@ class BinaryModelMetrics:
             counts = self._sized(counts)
         cum = self._with_running(counts, {"tp": F.col("pos"),
                                           "fp": F.col("neg")})
-        from spark_ext_spark.functions import attach_scalar_agg
+        totals = {"tot_pos": F.sum("pos"), "tot_neg": F.sum("neg")}
+        if self._prefix_path():
+            from spark_ext_spark.functions import attach_scalar_agg
+            cum = attach_scalar_agg(cum, totals, source=counts)
+        else:
+            # whole-table frame over the running sums' own ordering:
+            # same window spec, so the same Window operator — no second
+            # aggregate, exchange or broadcast for the totals
+            w_all = (Window.orderBy(F.desc("score"))
+                     .rowsBetween(Window.unboundedPreceding,
+                                  Window.unboundedFollowing))
+            cum = cum.select("*", *[agg.over(w_all).alias(name)
+                                    for name, agg in totals.items()])
         # Cached like the reference persists cumulativeCounts
         # (BinaryModelMetrics.scala:216): every curve/AUC reuses it.
-        return (attach_scalar_agg(cum,
-                                  {"tot_pos": F.sum("pos"),
-                                   "tot_neg": F.sum("neg")},
-                                  source=counts)
+        return (cum
                 .select("score", "tp", "fp",
                         (F.col("tot_pos") - F.col("tp")).alias("fn"),
                         (F.col("tot_neg") - F.col("fp")).alias("tn"),
@@ -203,11 +220,18 @@ class BinaryModelMetrics:
                         last: tuple | None) -> DataFrame:
         spark = curve.sparkSession
         cols = curve.columns
+
+        # one-row JVM relation of double literals: no pickled Python
+        # rows, no RDD scan
+        def point(values):
+            return spark.range(1, numPartitions=1).select(
+                *[F.lit(float(v)).alias(c) for c, v in zip(cols, values)])
+
         out = curve
         if first is not None:
-            out = spark.createDataFrame([first], cols).unionAll(out)
+            out = point(first).unionAll(out)
         if last is not None:
-            out = out.unionAll(spark.createDataFrame([last], cols))
+            out = out.unionAll(point(last))
         return out
 
     def unpersist(self) -> None:
@@ -227,7 +251,7 @@ class BinaryModelMetrics:
 
     def thresholds(self) -> DataFrame:
         # over the compacted counts table, NOT confusions: thresholds
-        # need no cumulative columns, so skip the totals attach+window
+        # need no cumulative columns or totals, so skip the window
         return (self._counts.orderBy(F.desc("score"))
                 .select(F.col("score").alias("threshold")))
 

@@ -171,15 +171,18 @@ class GatherEncoder(Estimator, _GatherEncoderParams,
 
         order = [F.desc("count"), F.asc("key")]
         n_fit = self.getOrDefault(self.fitPartitions)
-        # The coverage/support total rides INSIDE the plan as a
-        # broadcast single-row cross join — not a driver .first()
-        # round-trip — so the whole fit is one Spark job (dictionary
-        # collect) instead of two, and there is no driver sync point
-        # between the count and the threshold filter at scale.
-        def with_total(cdf):
-            from spark_ext_spark.functions import attach_scalar_agg
-            return attach_scalar_agg(
-                cdf, {"__total": F.coalesce(F.sum("count"), F.lit(0))})
+        # Single-partition path: the exclusive running sum, the
+        # coverage/support total (a whole-table frame) and the slot all
+        # come from ONE window over (count desc, key asc) — one Window
+        # operator, no second aggregate of the counts table. Both
+        # threshold filters keep a prefix of that order (counts are
+        # ≥ 1, so `cum` rises strictly and `count` falls), hence a slot
+        # numbered before the filter equals the post-filter numbering.
+        w = Window.orderBy(*order)
+        w_excl = w.rowsBetween(Window.unboundedPreceding, -1)
+        w_all = w.rowsBetween(Window.unboundedPreceding,
+                              Window.unboundedFollowing)
+        total = F.sum("count").over(w_all)
 
         if transformation == "top":
             # Exclusion BEFORE the coverage total (GatherEncoder.scala:178-183).
@@ -191,11 +194,10 @@ class GatherEncoder(Estimator, _GatherEncoderParams,
                 # index (exclusive count of preceding rows = rank-1)
                 # share one range shuffle. The coverage TOTAL rides the
                 # prefix operator's own offsets collect as a plan
-                # literal (r13) — the with_total() broadcast cross join
-                # below would re-aggregate the counts table a second
-                # time, which this path never needs (it already syncs
-                # on the driver for the offsets). Counts are longs, so
-                # the total is exact either way.
+                # literal (r13) — a second aggregate of the counts
+                # table is never needed, since this path already syncs
+                # on the driver for the offsets. Counts are longs, so
+                # the total is exact.
                 tot = {"__total": "cum"}  # keyed by the values entry
                 # whose summed column is `count`
                 cs = partitioned_cumulative_sums(
@@ -207,35 +209,50 @@ class GatherEncoder(Estimator, _GatherEncoderParams,
                 return (cs.filter(F.col("cum") < threshold)
                         .select("key", "count",
                                 F.col("slot").cast("int").alias("slot")))
-            threshold = F.lit(cover / 100.0) * F.col("__total")
-            w_excl = (Window.orderBy(*order)
-                      .rowsBetween(Window.unboundedPreceding, -1))
-            selected = (with_total(counts)
-                        .withColumn("cum", F.coalesce(
-                            F.sum("count").over(w_excl), F.lit(0)))
-                        .filter(F.col("cum") < threshold)
-                        .drop("cum", "__total"))
-        else:
-            # Threshold over the UNFILTERED total; exclusion after
-            # (GatherEncoder.scala:200-220).
-            support = self.getOrDefault(self.support)
-            threshold = F.lit(support / 100.0) * F.col("__total")
-            selected = (with_total(counts)
-                        .filter(F.col("count") >= threshold)
+            cum = F.coalesce(F.sum("count").over(w_excl), F.lit(0))
+            return (counts
+                    .select("key", "count", cum.alias("cum"),
+                            total.alias("__total"),
+                            (F.row_number().over(w) - 1).alias("slot"))
+                    .filter(F.col("cum")
+                            < F.lit(cover / 100.0) * F.col("__total"))
+                    .drop("cum", "__total"))
+
+        # Threshold over the UNFILTERED total; exclusion after
+        # (GatherEncoder.scala:200-220).
+        support = self.getOrDefault(self.support)
+        if n_fit > 1:
+            # the distributed path attaches the total as a broadcast
+            # single-row aggregate and numbers slots after exclusion
+            from spark_ext_spark.functions import attach_scalar_agg
+            selected = (attach_scalar_agg(
+                            counts, {"__total": F.coalesce(F.sum("count"),
+                                                           F.lit(0))})
+                        .filter(F.col("count")
+                                >= F.lit(support / 100.0)
+                                * F.col("__total"))
                         .drop("__total"))
             if exclude:
                 selected = selected.filter(~F.col("key").isin(list(exclude)))
-            if n_fit > 1:
-                cs = partitioned_cumulative_sums(
-                    selected, order, {"slot": F.lit(1)},
-                    num_partitions=n_fit, inclusive=False,
-                    persisted_out=persisted_out)
-                return cs.select("key", "count",
-                                 F.col("slot").cast("int").alias("slot"))
-
-        w_rank = Window.orderBy(*order)
-        return selected.withColumn(
-            "slot", F.row_number().over(w_rank) - F.lit(1))
+            cs = partitioned_cumulative_sums(
+                selected, order, {"slot": F.lit(1)},
+                num_partitions=n_fit, inclusive=False,
+                persisted_out=persisted_out)
+            return cs.select("key", "count",
+                             F.col("slot").cast("int").alias("slot"))
+        # excluded keys still count toward the total but take no slot:
+        # the slot is the running count of kept keys, on the same window
+        kept = (~F.col("key").isin(list(exclude)) if exclude
+                else F.lit(True))
+        w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        slot = (F.count_if(kept).over(w_run) - 1).cast("int")
+        return (counts
+                .select("key", "count", total.alias("__total"),
+                        kept.alias("__kept"), slot.alias("slot"))
+                .filter(F.col("count")
+                        >= F.lit(support / 100.0) * F.col("__total"))
+                .filter("__kept")
+                .drop("__total", "__kept"))
 
     def _fit(self, dataset: DataFrame) -> "GatherEncoderModel":
         self._validate_schema(dataset.schema)

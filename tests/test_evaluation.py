@@ -182,3 +182,39 @@ def test_unpersist_releases_prefix_intermediates(spark):
     m.unpersist()
     assert m._prefix_persists == []
     assert all(not df.is_cached for df in held)
+
+
+def test_evaluation_job_floor(spark, count_jobs):
+    """AUC + gains + lift on the 10 fixture rows run at most 9 Spark
+    jobs: the totals come from the running-sum window (no second
+    aggregate, exchange or broadcast) and curve endpoints are JVM
+    literals. A fresh copy of the rows keeps earlier tests' cached
+    confusion tables from hiding jobs."""
+    src = spark.createDataFrame(SCORE_AND_LABELS,
+                                "score double, label double").cache()
+    src.count()
+    m = BinaryModelMetrics(src)
+
+    def evaluate():
+        m.area_under_roc()
+        m.gains().collect()
+        m.lift().collect()
+
+    assert count_jobs(evaluate) <= 9
+    m.unpersist()
+    src.unpersist()
+
+
+def test_curve_endpoints_scan_no_python_rows(spark):
+    """gains/roc/pr endpoints are one-row JVM relations, never
+    pickled Python rows (a ``Scan ExistingRDD``). The source is an
+    inline VALUES table so only the endpoints could bring one in."""
+    rows = ", ".join(f"({s!r}D, {lab!r}D)" for s, lab in SCORE_AND_LABELS)
+    src = spark.sql(f"SELECT * FROM VALUES {rows} AS t(score, label)")
+    m = BinaryModelMetrics(src)
+    for curve in (m.gains(), m.roc(), m.pr()):
+        curve.collect()
+        plan = curve._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan
+    assert m.pr().collect()[0] == (0.0, 1.0)
+    m.unpersist()

@@ -107,6 +107,16 @@ def test_fit_key_order_is_count_desc_key_asc(cover_df):
                       "amazon.com", "imdb.com"]
 
 
+def test_fit_job_floor(cover_df, count_jobs):
+    """A single-partition fit takes its running sum, total and slots
+    from one window, so a ``top`` or ``index`` fit runs at most 3 Spark
+    jobs (6 when the total was a broadcast aggregate)."""
+    cover_df.count()
+    for kw in ({"transformation": "top", "cover": 80.0},
+               {"transformation": "index", "support": 3.1}):
+        assert count_jobs(lambda: _encoder(**kw).fit(cover_df)) <= 3, kw
+
+
 # --- model transform — GatherEncoderModelSpec.scala ----------------------
 
 MODEL_SCHEMA = StructType([

@@ -53,7 +53,15 @@ def _gathered(spark):
 
 def test_encoder_distributed_fit_matches_default(spark):
     df = _gathered(spark)
+    # 1039 key occurrences; the exclusive running sum reaches exactly
+    # 536 at k08, so this cover's threshold equals it and the strict
+    # `cum < threshold` must stop just before k08
+    exact_cover = 53600 / 1039
+    assert exact_cover / 100.0 * 1039 == 536.0
     for kwargs in ({"transformation": "top", "cover": 70.0},
+                   {"transformation": "top", "cover": 70.0,
+                    "excludeKeys": ["k13", "k05"]},
+                   {"transformation": "top", "cover": exact_cover},
                    {"transformation": "top", "cover": 100.0},
                    {"transformation": "index", "support": 2.0},
                    {"transformation": "index", "support": 2.0,
@@ -63,6 +71,9 @@ def test_encoder_distributed_fit_matches_default(spark):
         dist = GatherEncoder(inputCol="sites", outputCol="f", keyCol="key",
                              valueCol="value", fitPartitions=5, **kwargs)
         assert dist.fit(df).keys == base.fit(df).keys, kwargs
+    keys = GatherEncoder(inputCol="sites", outputCol="f", keyCol="key",
+                         valueCol="value", cover=exact_cover).fit(df).keys
+    assert len(keys) == 18 and "k08" not in keys
 
 
 def test_encoder_distributed_plan_uses_range_partitioning(spark):

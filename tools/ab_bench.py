@@ -30,7 +30,8 @@ def main() -> None:
     from spark_ext_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     spark = get_spark("spark_ext_spark-ab", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()

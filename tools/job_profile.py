@@ -26,7 +26,8 @@ def main() -> None:
     import __spark_entry__ as em
     from spark_ext_spark.session import get_spark
 
-    spark = get_spark("job-profile", master="local[32]")
+    cpus = len(os.sched_getaffinity(0))
+    spark = get_spark("job-profile", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
     tracker = sc.statusTracker()

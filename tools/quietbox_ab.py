@@ -12,7 +12,8 @@ adjacent probe reading; report raw medians/bests AND probe-normalized
 values against the r7 quiet-box probe reference (0.33 s warm).
 
 Usage: python tools/quietbox_ab.py [query ...]
-(default targets = the r10 r→s block; sf0.1, local[32], one JSON line)
+(default targets = the r10 r→s block; sf0.1, local[$SPARK_GRAFT_CPUS]
+defaulting to the usable cores, one JSON line)
 """
 from __future__ import annotations
 
@@ -43,7 +44,8 @@ def loadavg():
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     spark = get_spark("quietbox-ab", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     qs = em.queries()

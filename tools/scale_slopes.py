@@ -55,7 +55,8 @@ def main() -> None:
     unknown = [n for n in names if n not in qs]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     spark = get_spark("scale-slopes", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
