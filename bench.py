@@ -37,48 +37,22 @@ import os
 import re
 import statistics
 import sys
-import time
 import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from spark_ext_spark.session import get_spark  # noqa: E402
-
-RUNS = 3
-CALIBRATION_QUERY = "pricing_summary"
-
-
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _loadavg_1m() -> float | None:
-    try:
-        return round(os.getloadavg()[0], 2)
-    except OSError:
-        return None
+from tools.measure import (  # noqa: E402
+    PROBE as CALIBRATION_QUERY, RUNS, SF_DIR, force, loadavg, probe,
+    session, timed, warm_footers)
 
 
 def _calibrate(spark, queries, sf_dir) -> float | None:
-    """Median of 3 forced runs of the fixed calibration query — a box
-    load probe, not a benchmark row (its own sweep timing is separate).
-    One UNTIMED run first: the probe must measure box load, and on the
-    pre-sweep call the first execution otherwise pays one-time JVM
-    codegen/shuffle spin-up (measured 3.0 s vs 0.33 s warm — pure
-    cold-start, which would make every pre/post pair look like drift)."""
-    fn = queries.get(CALIBRATION_QUERY)
-    if fn is None:
-        return None
+    """The fixed calibration query's load probe (`tools/measure.py`
+    `probe`: 1 untimed + median of 3, measured 2.9 s cold vs 0.53 s
+    warm on a 4-core host) — its own sweep timing is separate."""
     try:
-        force(fn(spark, sf_dir))
-        samples = []
-        for _ in range(RUNS):
-            t0 = time.monotonic()
-            force(fn(spark, sf_dir))
-            samples.append(time.monotonic() - t0)
-        spark.catalog.clearCache()
-        return round(statistics.median(samples), 4)
+        return probe(spark, queries, sf_dir)
     except Exception:  # noqa: BLE001 — calibration must never fail the bench
         return None
 
@@ -105,33 +79,21 @@ def _detail_path() -> str:
 
 def main() -> None:
     detail_path = _detail_path()
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS",
-                          str(len(os.sched_getaffinity(0))))
     # tolerate any directory name: 'sf' not followed by a number (e.g.
     # /data/transfer) must not crash the bench at startup
-    m = re.search(r"sf([0-9.]+)/?$", sf_dir)
+    m = re.search(r"sf([0-9.]+)/?$", SF_DIR)
     try:
         sf = float(m.group(1)) if m else -1.0
     except ValueError:
         sf = -1.0
-    spark = get_spark("spark_ext_spark-bench", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("spark_ext_spark-bench")
 
     queries = entrymod.queries()
 
-    # Untimed warmup: JVM JIT, codegen compilation, and parquet footer
-    # reads otherwise land entirely on the FIRST timed query (observed
-    # as ±1 s run-to-run noise on whichever query happens to be first).
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"):
-        try:
-            spark.read.parquet(f"{sf_dir}/{t}.parquet").limit(1).count()
-        except Exception:  # noqa: BLE001 — warmup must never fail the bench
-            pass
+    warm_footers(spark, SF_DIR)
 
-    load_pre = _loadavg_1m()
-    calib_pre = _calibrate(spark, queries, sf_dir)
+    load_pre = loadavg()
+    calib_pre = _calibrate(spark, queries, SF_DIR)
 
     timings: dict[str, float] = {}
     best: dict[str, float] = {}
@@ -145,12 +107,8 @@ def main() -> None:
     # is unchanged; only the per-query series becomes comparable.
     for name in sorted(queries):
         fn = queries[name]
-        samples = []
         try:
-            for _ in range(RUNS):
-                t0 = time.monotonic()
-                force(fn(spark, sf_dir))
-                samples.append(time.monotonic() - t0)
+            samples = timed(lambda: force(fn(spark, SF_DIR)))
             timings[name] = round(statistics.median(samples), 4)
             best[name] = round(min(samples), 4)
         except Exception as exc:  # noqa: BLE001 — bench must survive any query
@@ -164,8 +122,8 @@ def main() -> None:
             except Exception:  # noqa: BLE001
                 pass
 
-    calib_post = _calibrate(spark, queries, sf_dir)
-    load_post = _loadavg_1m()
+    calib_post = _calibrate(spark, queries, SF_DIR)
+    load_post = loadavg()
 
     total = round(sum(timings.values()), 4)
     total_best = round(sum(best.values()), 4)

@@ -40,8 +40,8 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     from spark_ext_spark.llm import similarity
     from spark_ext_spark.plans.relational import load
-    from spark_ext_spark.session import get_spark
-    spark = get_spark(master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
+    from tools.measure import release, session
+    spark = session("ann-recall")
     emb = load(spark, sf_dir, "embeddings").cache()
     n = emb.count()
 
@@ -97,8 +97,7 @@ def main() -> None:
         # release each run's cached index artifact OUTSIDE the timed
         # region — 8 accumulated artifacts would skew the later rows
         # under memory pressure on larger corpora
-        for fr in held:
-            fr.unpersist()
+        release(held)
         method, setting = label.split(" ", 1)
         print(f"| {method} | {setting} | "
               f"{recall_at_k(approx, exact):.3f} | {dt:.1f} |")

@@ -34,24 +34,19 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from spark_ext_spark.session import get_spark  # noqa: E402
+from tools.measure import (  # noqa: E402
+    SF_DIR, best_of, force, release, session)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 AMPLIFY = int(os.environ.get("SKEW_AMPLIFY", "1024"))
 RUNS = int(os.environ.get("SKEW_RUNS", "2"))
 ARMS = os.environ.get("SKEW_ARMS", "chunked,windowed").split(",")
 INPUT = os.environ.get("SKEW_INPUT",
                        f"/tmp/asof_scale_input_x{AMPLIFY}.parquet")
-
-
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def build(spark) -> None:
@@ -68,8 +63,7 @@ def build(spark) -> None:
 
 
 def main() -> None:
-    spark = get_spark("asof-scale-point")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("asof-scale-point")
     from spark_ext_spark.operators.asof import asof_join
 
     if "--build" in sys.argv or not os.path.exists(INPUT):
@@ -93,24 +87,14 @@ def main() -> None:
 
     if "chunked" in ARMS:
         held: list = []
-        best = float("inf")
-        for _ in range(RUNS):
-            t0 = time.perf_counter()
-            force(asof_join(left, right, strategy="chunked",
-                            persisted_out=held, **kw))
-            best = min(best, time.perf_counter() - t0)
-            for fr in held:  # teardown outside the timed region
-                fr.unpersist()
-            held.clear()
-        results["asof_chunked_skewed"] = round(best, 3)
+        results["asof_chunked_skewed"] = best_of(
+            lambda: force(asof_join(left, right, strategy="chunked",
+                                    persisted_out=held, **kw)),
+            RUNS, lambda: release(held))
 
     if "windowed" in ARMS:
-        best = float("inf")
-        for _ in range(RUNS):
-            t0 = time.perf_counter()
-            force(asof_join(left, right, **kw))
-            best = min(best, time.perf_counter() - t0)
-        results["asof_windowed_skewed"] = round(best, 3)
+        results["asof_windowed_skewed"] = best_of(
+            lambda: force(asof_join(left, right, **kw)), RUNS)
 
     print(json.dumps({"rows": n, "hot": hot, "amplify": AMPLIFY,
                       "driver_mem": os.environ.get(

@@ -50,10 +50,9 @@ def audit(p: str) -> dict:
 
 def main() -> None:
     import __spark_entry__ as em
-    from spark_ext_spark.session import get_spark
+    from tools.measure import session
 
-    spark = get_spark("plan-audit", master="local[8]")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("plan-audit")
     rows = []
     for name, fn in em.queries().items():
         try:

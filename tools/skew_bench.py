@@ -30,33 +30,19 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from spark_ext_spark.session import get_spark  # noqa: E402
+from tools.measure import (  # noqa: E402
+    SF_DIR, best_of, force, release, session)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 AMPLIFY = int(os.environ.get("SKEW_AMPLIFY", "8"))
 
 
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def timed(fn, runs: int = 3) -> float:
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        fn()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
-
-
 def main() -> None:
-    spark = get_spark()
+    spark = session("skew-bench")
     from spark_ext_spark.plans.relational import load
 
     ev = load(spark, SF_DIR, "events").select(
@@ -88,8 +74,8 @@ def main() -> None:
                 .agg(F.collect_list(F.struct("event_type", "value"))
                      .alias("gathered")))
 
-    results["gather_skewed"] = timed(lambda: force(gather_q(skewed)))
-    results["gather_uniform"] = timed(lambda: force(gather_q(uniform)))
+    results["gather_skewed"] = best_of(lambda: force(gather_q(skewed)))
+    results["gather_uniform"] = best_of(lambda: force(gather_q(uniform)))
 
     def naive_totals(df):
         return df.groupBy("user_id").agg(
@@ -104,8 +90,9 @@ def main() -> None:
              "n_events": (F.count(F.lit(1)), F.sum("n_events"))},
             n_salts=16)
 
-    results["agg_naive_skewed"] = timed(lambda: force(naive_totals(skewed)))
-    results["agg_salted_skewed"] = timed(lambda: force(salted_totals(skewed)))
+    results["agg_naive_skewed"] = best_of(lambda: force(naive_totals(skewed)))
+    results["agg_salted_skewed"] = best_of(
+        lambda: force(salted_totals(skewed)))
 
     from pyspark.sql.window import Window
     w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -115,8 +102,8 @@ def main() -> None:
         return df.select("user_id", "event_id",
                          F.sum("value").over(w).alias("cum_value"))
 
-    results["window_skewed"] = timed(lambda: force(cumsum_q(skewed)))
-    results["window_uniform"] = timed(lambda: force(cumsum_q(uniform)))
+    results["window_skewed"] = best_of(lambda: force(cumsum_q(skewed)))
+    results["window_uniform"] = best_of(lambda: force(cumsum_q(uniform)))
 
     from spark_ext_spark.operators.asof import asof_join
     right = skewed.select("user_id", F.col("ts").alias("rts"),
@@ -125,26 +112,16 @@ def main() -> None:
     kw = dict(on="user_id", left_ts="ts", right_ts="rts",
               value_cols=["price"])
 
-    results["asof_windowed_skewed"] = timed(
+    results["asof_windowed_skewed"] = best_of(
         lambda: force(asof_join(left, right, **kw)), runs=2)
 
     # unpersist happens OUTSIDE the timed region — the windowed arm has
     # no analogous teardown, so timing it would bias the A/B
     held: list = []
-
-    def chunked():
-        force(asof_join(left, right, strategy="chunked",
-                        persisted_out=held, **kw))
-
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        chunked()
-        best = min(best, time.perf_counter() - t0)
-        for fr in held:
-            fr.unpersist()
-        held.clear()
-    results["asof_chunked_skewed"] = round(best, 3)
+    results["asof_chunked_skewed"] = best_of(
+        lambda: force(asof_join(left, right, strategy="chunked",
+                                persisted_out=held, **kw)),
+        runs=2, after=lambda: release(held))
 
     # 5. global-ordering cumulative sums: one global window (every row
     # through ONE task) vs operators/prefix.py's range-partitioned
@@ -167,20 +144,14 @@ def main() -> None:
             force(base.select("score", F.sum("v").over(gw).alias("cum")))
 
         tag = f"{rows:.0e}".replace("+0", "").replace("+", "")
-        results[f"prefix_global_window_{tag}"] = timed(window_path, runs=2)
+        results[f"prefix_global_window_{tag}"] = best_of(window_path, runs=2)
         # unpersist happens OUTSIDE the timed region (same rule as the
         # as-of A/B above: the window arm has no analogous teardown)
-        best = float("inf")
-        for _ in range(2):
-            held: list = []
-            t0 = time.perf_counter()
-            force(partitioned_cumulative_sums(
+        results[f"prefix_partitioned_{tag}"] = best_of(
+            lambda: force(partitioned_cumulative_sums(
                 base, ["score"], {"cum": F.col("v")},
-                persisted_out=held))
-            best = min(best, time.perf_counter() - t0)
-            for fr in held:
-                fr.unpersist()
-        results[f"prefix_partitioned_{tag}"] = round(best, 3)
+                persisted_out=held)),
+            runs=2, after=lambda: release(held))
 
     print(json.dumps({"sf_dir": SF_DIR, "rows": n, "hot_key_rows": hot,
                       "amplify": AMPLIFY, "sec": results}))
