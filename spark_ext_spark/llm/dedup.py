@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
-    "normalize_text", "exact_duplicates", "word_shingles",
+    "normalize_text", "text_digest", "exact_duplicates", "word_shingles",
     "blocked_pair_counts", "jaccard_similar_pairs", "containment_pairs",
     "minhash_signatures", "minhash_lsh_pairs",
     "simhash", "simhash_near_pairs",
@@ -50,14 +50,19 @@ def normalize_text(col: Column | str) -> Column:
     return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
 
 
+def text_digest(col: Column | str) -> Column:
+    """Exact-dedup key: sha256 of the normalized text, so collisions
+    stay negligible at any corpus size."""
+    return F.sha2(normalize_text(col), 256)
+
+
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact dedup groups: one row per distinct normalized text with
     the canonical (minimum) id, member count, and sorted member ids.
-    Single digest-keyed shuffle; sha256 keeps collisions negligible at
-    any corpus size."""
-    digest = F.sha2(normalize_text(text_col), 256)
+    Single digest-keyed shuffle."""
     return (df
-            .select(F.col(id_col).alias("member_id"), digest.alias("digest"))
+            .select(F.col(id_col).alias("member_id"),
+                    text_digest(text_col).alias("digest"))
             .groupBy("digest")
             .agg(F.min("member_id").alias("canonical_id"),
                  F.count(F.lit(1)).alias("n_members"),

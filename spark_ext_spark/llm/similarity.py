@@ -1,9 +1,9 @@
 """Similarity search over embedding columns (``array<float>``).
 
-- ``cosine_topk``: brute-force top-k, all-JVM (zip_with/aggregate dot
-  product + window rank). The baseline: exact, one shuffle for the
-  rank, broadcast of the (smaller) query side — right answer whenever
-  one side fits in a broadcast.
+- ``cosine_topk``: exact brute-force top-k — the corpus is hash-sharded
+  and each (shard) co-group runs one numpy GEMM; shard-local winners
+  merge losslessly into the global top-k. Nothing is broadcast or
+  collected, so it scales with the corpus.
 - ``lsh_topk``: random-hyperplane LSH variant — the 100 TB path:
   vectors hash to sign-pattern buckets (seeded projection matrix,
   shipped as literal arrays so the whole plan stays declarative);
@@ -30,10 +30,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-__all__ = ["cosine_similarity_col", "cosine_topk", "lsh_buckets",
-           "lsh_topk", "fit_ivf_centroids_quantized",
-           "ivf_topk_deterministic", "embedding_near_dups",
-           "drop_artifact_table"]
+__all__ = ["cosine_topk", "lsh_buckets", "lsh_topk",
+           "fit_ivf_centroids_quantized", "ivf_topk_deterministic",
+           "embedding_near_dups", "drop_artifact_table"]
 
 
 def _materialize_artifact(df: DataFrame, storage: str,
@@ -117,23 +116,6 @@ def drop_artifact_table(spark, table_name: str) -> None:
     spark.sql(f"DROP TABLE IF EXISTS `{escaped}`")
 
 
-def cosine_similarity_col(a: Column, b: Column) -> Column:
-    """cos(a,b) as a JVM expression over two array<double> columns.
-
-    Zero-norm vectors yield similarity 0.0 — the same guard as the
-    GEMM paths (`_role_split_gemm`). Without it, 0/0 = NaN, and Spark
-    ranks NaN as the LARGEST double, so one zero (padding) embedding
-    would top every descending-similarity ranking it appears in."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    return F.when((na == 0.0) | (nb == 0.0), F.lit(0.0)) \
-            .otherwise(dot / (na * nb))
-
-
 def _finite_vec(vec: Column, entry: str,
                 dim: int | None = None) -> Column:
     """Per-row non-finite guard for an ``array<double>`` vector column
@@ -191,65 +173,23 @@ def _nn_vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
 def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int,
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 round_to: int | None = None,
-                method: str = "gemm",
                 shard_rows: int = 16384) -> DataFrame:
     """Exact top-k neighbors per query (excluding self-matches).
     Deterministic rank order: similarity desc, neighbor id asc.
 
-    method="gemm" (default): distributed block-nested-loop — the
-    corpus is hash-sharded into groups of ≤ ``shard_rows`` vectors,
-    every query probes every shard (explode over shard ids), and each
-    (shard) co-group does ONE numpy GEMM emitting per-shard top-k; a
-    final groupBy(query_id) merges shard-local winners into the exact
-    global top-k (a candidate dropped at shard rank >k is beaten by k
-    shard-mates that also beat it globally, so the merge is lossless).
-    NOTHING materializes on the driver — the only driver-side job is a
-    count() to size the shard grid, so the plan survives corpora that
-    would OOM a broadcast. Query replication is S× (S = #shards):
-    inherent to exact search; use lsh_topk/ivf_topk_deterministic when
-    S gets large.
-
-    method="expr": all-JVM crossJoin + zip_with/aggregate + window —
-    kept as the declarative reference plan (good when M is tiny).
-    NOTE: this path runs an EAGER one-row Spark job at plan-build
-    time (``_infer_dim`` reads the corpus's first non-null vector to
-    pin the ragged-dim guard's expected dimension) — so unlike the
-    gemm path the returned DataFrame is not fully lazy, and if the
-    corpus's FIRST row is itself ragged, every well-formed row will
-    be the one reported as dimension-mismatched (the guard trusts the
-    probed row; repair order matters).
+    Distributed block-nested-loop: the corpus is hash-sharded into
+    groups of ≤ ``shard_rows`` vectors, every query probes every shard
+    (explode over shard ids), and each (shard) co-group does ONE numpy
+    GEMM emitting per-shard top-k; a final groupBy(query_id) merges
+    shard-local winners into the exact global top-k (a candidate
+    dropped at shard rank >k is beaten by k shard-mates that also beat
+    it globally, so the merge is lossless). NOTHING materializes on
+    the driver — the only driver-side job is a count() to size the
+    shard grid, so the plan survives corpora that would OOM a
+    broadcast. Query replication is S× (S = #shards): inherent to
+    exact search; use lsh_topk/ivf_topk_deterministic when S gets
+    large.
     """
-    if method == "expr":
-        # dim probe: without it zip_with NULL-pads ragged vectors and
-        # the expr plan silently ranks undefined similarities (the
-        # GEMM path names this defect inside the group). An empty or
-        # all-null corpus has no dim and nothing to mis-rank — keep
-        # the old lazy empty-result behavior (gemm-path parity)
-        # instead of raising at plan build (round-10 self-review)
-        try:
-            dim = _infer_dim(corpus, vec_col)
-        except ValueError:
-            dim = None
-        q = (queries.filter(F.col(vec_col).isNotNull())
-             .select(F.col(id_col).alias("query_id"),
-                     _finite_vec(F.col(vec_col).cast("array<double>"),
-                                 "cosine_topk", dim=dim).alias("qv")))
-        c = (corpus.filter(F.col(vec_col).isNotNull())
-             .select(F.col(id_col).alias("neighbor_id"),
-                     _finite_vec(F.col(vec_col).cast("array<double>"),
-                                 "cosine_topk", dim=dim).alias("cv")))
-        sim = cosine_similarity_col(F.col("qv"), F.col("cv"))
-        if round_to is not None:
-            sim = F.round(sim, round_to)
-        pairs = (F.broadcast(q).crossJoin(c)
-                 .filter(F.col("query_id") != F.col("neighbor_id"))
-                 .select("query_id", "neighbor_id", sim.alias("sim")))
-        w = Window.partitionBy("query_id").orderBy(F.desc("sim"),
-                                                   F.asc("neighbor_id"))
-        return (pairs.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("query_id", "neighbor_id", "sim", "rank"))
-
     c, n_shards = _sharded(corpus, id_col, vec_col, shard_rows)
     c = c.withColumn("role", F.lit("c"))
     q = (_nn_vectors(queries, id_col, vec_col)
@@ -267,8 +207,7 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int,
 def _id_type(df: DataFrame, col: str) -> str:
     """DDL type of an id column, for applyInPandas output schemas —
     hardcoding ``long`` would crash the GEMM paths at Arrow
-    serialization for string/UUID ids (which the expr/lsh variants
-    accept fine)."""
+    serialization for string/UUID ids."""
     return df.schema[col].dataType.simpleString()
 
 

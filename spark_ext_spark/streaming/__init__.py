@@ -1,22 +1,29 @@
-"""Structured Streaming variants of the engine's operators.
+"""Structured Streaming operators.
 
-The reference predates Structured Streaming entirely (Spark 1.5); these
-are the stream-native re-expressions of its batch semantics plus the
-LLM-pipeline ops that matter on a live ingest path:
+The reference predates Structured Streaming entirely (Spark 1.5).
+Where a batch builder exists, the stream op calls it; the rest are
+stream-only shapes (watermarked state, sinks):
 
-- ``streaming_gather``: windowed Gather — the two-level aggregation
-  collapses into one update-mode groupBy per event-time window.
-- ``streaming_dedup_exact``: exact dedup on a normalized-text digest
-  with ``dropDuplicatesWithinWatermark`` (bounded state).
-- ``streaming_text_quality``: stateless per-row text stats/quality —
-  pure expressions, so they run identically on a stream.
-- ``streaming_event_counts``: watermarked sliding-window event rollup
-  (the canonical late-data-tolerant aggregate).
-- ``streaming_distinct_estimate``: per-window approximate distinct via
-  the deterministic fixed-theta sketch — streaming aggregation allows
-  neither count(DISTINCT) nor sketch aggs, and this bounds dedup state
-  to a p-fraction of the distinct keys (batch twin:
-  operators/sketches.theta_distinct).
+- ``streaming_gather``: ``operators.gather.Gather`` keyed on
+  (event-time window, pk).
+- ``streaming_dedup_exact``: keeps the first document per
+  ``llm.dedup.text_digest`` (the ``exact_duplicates`` key) with
+  ``dropDuplicatesWithinWatermark``.
+- ``streaming_distinct_estimate``: per-window fixed-theta distinct
+  estimate on ``operators.sketches``' threshold and estimate (batch
+  twin: ``theta_distinct``).
+- ``streaming_event_counts``: watermarked (sliding) window count + sum
+  per key.
+- ``streaming_interval_join``: watermarked stream-stream interval join.
+- ``streaming_running_totals``: unwindowed per-key lifetime totals
+  (``applyInPandasWithState``).
+- ``foreach_batch_upsert``: foreachBatch sink that upserts into a
+  parquet key-value store.
+- ``sessionize`` (``streaming.sessionize``): gap sessionization; batch
+  twin ``plans.relational.event_sessions``.
+
+Pure per-row builders need no stream variant: ``llm.text.text_stats``
+and the other ``select``-only ops run on a stream as they are.
 
 All builders take/return streaming DataFrames and never call an
 action; sinks are the caller's choice (tests use the memory sink).
@@ -24,9 +31,7 @@ action; sinks are the caller's choice (tests use the memory sink).
 
 from spark_ext_spark.streaming.ops import (  # noqa: F401
     foreach_batch_upsert, streaming_dedup_exact,
-    streaming_distinct_estimate, streaming_enrich,
-    streaming_event_counts, streaming_gather, streaming_interval_join,
-    streaming_text_quality)
+    streaming_distinct_estimate, streaming_event_counts, streaming_gather,
+    streaming_interval_join)
 from spark_ext_spark.streaming.stateful import (  # noqa: F401
-    ROCKSDB_PROVIDER, streaming_running_totals,
-    streaming_running_totals_v1)
+    streaming_running_totals)

@@ -5,8 +5,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spark_ext_spark.llm.dedup import normalize_text
-from spark_ext_spark.llm.text import tokens
+from spark_ext_spark.llm.dedup import text_digest
+from spark_ext_spark.operators.gather import Gather
 
 
 def streaming_event_counts(events: DataFrame, ts_col: str = "ts",
@@ -34,27 +34,15 @@ def streaming_gather(events: DataFrame, ts_col: str = "ts",
                      pk_col: str = "user_id", key_col: str = "event_type",
                      value_col: str = "value", window: str = "10 minutes",
                      watermark: str = "20 minutes") -> DataFrame:
-    """Stream-native Gather: per (window, pk) the gathered
-    array<struct<key,value>> — batch Gather's two groupBys fuse into
-    one windowed aggregation (collect over pre-summed pairs via
-    map_from_entries of a pivot-free map aggregate).
-
-    Uses sum-by-key inside the aggregate (map_concat pattern is not
-    associative-safe in agg), so: first level (window, pk, key) sums,
-    second level collects — same shape as batch, both watermarked."""
-    win = F.window(ts_col, window)
-    level1 = (events
-              .withWatermark(ts_col, watermark)
-              .groupBy(win.alias("win"), F.col(pk_col), F.col(key_col))
-              .agg(F.sum(value_col).cast("double").alias("__v")))
-    # Second aggregation over the append-mode output of the first is
-    # supported in Spark 4 (multiple stateful operators) as long as the
-    # window column is carried through.
-    struct_col = F.struct(F.col(key_col).alias(key_col),
-                          F.col("__v").alias(value_col))
-    return (level1
-            .groupBy("win", pk_col)
-            .agg(F.collect_list(struct_col).alias("gathered"))
+    """Windowed Gather: batch ``Gather`` keyed on (event-time window,
+    pk). Its two groupBys become two chained stateful aggregations,
+    legal in Spark 4 append mode because the watermarked window
+    column is carried through both."""
+    windowed = (events.withWatermark(ts_col, watermark)
+                .withColumn("win", F.window(ts_col, window)))
+    gather = Gather(primaryKeyCols=["win", pk_col], keyCol=key_col,
+                    valueCol=value_col, outputCol="gathered")
+    return (gather.transform(windowed)
             .select(F.col("win.start").alias("window_start"),
                     pk_col, "gathered"))
 
@@ -62,11 +50,12 @@ def streaming_gather(events: DataFrame, ts_col: str = "ts",
 def streaming_dedup_exact(docs: DataFrame, ts_col: str, id_col: str,
                           text_col: str,
                           watermark: str = "1 hour") -> DataFrame:
-    """Exact streaming dedup: keep the first document per normalized-
-    text digest within the watermark horizon; state size is bounded by
-    the horizon (dropDuplicatesWithinWatermark)."""
+    """Exact streaming dedup: keep the first document per
+    ``text_digest`` (the ``exact_duplicates`` key) within the
+    watermark horizon; state size is bounded by the horizon
+    (dropDuplicatesWithinWatermark)."""
     digested = (docs
-                .withColumn("digest", F.sha2(normalize_text(text_col), 256))
+                .withColumn("digest", text_digest(text_col))
                 .withWatermark(ts_col, watermark))
     return digested.dropDuplicatesWithinWatermark(["digest"])
 
@@ -119,35 +108,6 @@ def streaming_distinct_estimate(events: DataFrame, ts_col: str = "ts",
                     "n_kept", "distinct_est"))
 
 
-def streaming_enrich(events: DataFrame, dim: DataFrame,
-                     on: str, how: str = "left") -> DataFrame:
-    """Stream-static join: enrich a stream against a batch dimension
-    table. The static side re-plans per micro-batch (so a dimension
-    refresh is picked up) and broadcasts under the auto-broadcast
-    threshold — no streaming state at all, unlike stream-stream joins.
-    At 100 TB-of-stream this is THE pattern for dictionary/dimension
-    enrichment; only stream-stream correlation needs watermarked state."""
-    return events.join(F.broadcast(dim), on, how)
-
-
-def streaming_text_quality(docs: DataFrame, id_col: str,
-                           text_col: str) -> DataFrame:
-    """Stateless per-row text stats — identical expressions to the
-    batch path, legal on any stream with no watermark needed."""
-    c = F.col(text_col)
-    toks = tokens(text_col)
-    nz = F.greatest(F.length(c), F.lit(1))
-    return docs.select(
-        F.col(id_col),
-        F.length(c).alias("n_chars"),
-        F.size(toks).alias("n_tokens"),
-        F.round(F.size(F.array_distinct(toks))
-                / F.greatest(F.size(toks), F.lit(1)).cast("double"), 4)
-         .alias("distinct_ratio"),
-        F.round(F.length(F.regexp_replace(c, r"[^0-9]", "")) / nz, 4)
-         .alias("digit_ratio"))
-
-
 def foreach_batch_upsert(key_cols: list[str], order_col: str, path: str):
     """Build a foreachBatch sink that upserts each micro-batch into a
     parquet key-value store: union existing + batch, keep the latest
@@ -159,7 +119,6 @@ def foreach_batch_upsert(key_cols: list[str], order_col: str, path: str):
 
     Returns a function suitable for ``.writeStream.foreachBatch(...)``.
     """
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
@@ -207,11 +166,11 @@ def streaming_interval_join(left: DataFrame, right: DataFrame, on: str,
                             how: str = "inner") -> DataFrame:
     """Stream-STREAM interval join: right-side rows match a left row
     with the same key whose timestamp falls in [left_ts, left_ts +
-    upper]. Unlike stream-static enrichment this buffers BOTH sides in
-    state; the watermarks plus the time-bound condition are what let
-    Spark evict — without the interval bound the state would grow
-    forever, so the bound is mandatory, not a tuning choice. State per
-    key ≈ rows inside (watermark + upper) horizon.
+    upper]. Both sides are buffered in state; the watermarks plus the
+    time-bound condition are what let Spark evict — without the
+    interval bound the state would grow forever, so the bound is
+    mandatory, not a tuning choice. State per key ≈ rows inside
+    (watermark + upper) horizon.
 
     Column names must be disjoint apart from ``on`` (both sides are
     aliased; the join key is exposed once)."""

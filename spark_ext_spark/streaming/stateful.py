@@ -1,57 +1,31 @@
-"""Custom stateful streaming via Spark 4's transformWithStateInPandas.
+"""Unwindowed running totals via ``applyInPandasWithState``.
 
-``applyInPandasWithState`` (streaming/sessionize.py) is the Spark 3.x
-arbitrary-state API; ``transformWithStateInPandas`` is its Spark 4
-successor — typed state handles, TTL, timers, and the RocksDB state
-store. ``streaming_running_totals`` is the canonical op that windowed
-aggregation cannot express: an UNWINDOWED lifetime aggregate per key,
-emitted on every update.
-
-State design for scale: one ValueState row per key (two scalars), so
-state size is O(distinct keys), independent of event volume; with the
-RocksDB provider the working set spills off-heap. An optional TTL
-bounds abandoned-key state on unbounded key spaces.
-
-Environment note: Spark's transformWithState driver worker speaks
-protobuf to the JVM; ``google.protobuf`` is not installed in this
-container, so the query fails at stream start here (the operator
-builds fine — plan construction needs no protobuf). The test skips
-when protobuf is absent; on any standard Spark 4 deployment (protobuf
-ships with pyspark[connect] and every distro) it runs as written.
-``streaming_running_totals_v1`` is the same operator on the Spark 3.x
-``applyInPandasWithState`` API (no protobuf wire protocol) — it
-EXECUTES in this container, so the running-totals semantics
-(cross-batch accumulation, checkpoint-restart survival) carry
-executed evidence even where the v2 API cannot start; the two share
-one output schema and are differential-testable on any deployment
-that runs both.
+``streaming_running_totals`` is the canonical op that windowed
+aggregation cannot express: a lifetime aggregate per key, emitted on
+every update. State is one row per key (two scalars), so state size
+is O(distinct keys), independent of event volume. Its batch twin is a
+plain ``groupBy(key).agg(count, sum)``, which the last row emitted per
+key equals (a null value adds 0 to the total).
 """
 
 from __future__ import annotations
 
+from typing import Any, Iterator, Tuple
+
+import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (DoubleType, LongType, StructField,
                                StructType)
 
-__all__ = ["streaming_running_totals", "streaming_running_totals_v1",
-           "ROCKSDB_PROVIDER"]
-
-ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming."
-                    "state.RocksDBStateStoreProvider")
+__all__ = ["streaming_running_totals"]
 
 
 def streaming_running_totals(events: DataFrame, key_col: str = "user_id",
-                             value_col: str = "value",
-                             ttl_ms: int | None = None) -> DataFrame:
+                             value_col: str = "value") -> DataFrame:
     """(key, n_events, total_value) running totals across ALL
-    micro-batches — one output row per key per batch that touched it
-    (update semantics). Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass = ROCKSDB_PROVIDER``).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming import (StatefulProcessor,
-                                       StatefulProcessorHandle)
-
+    micro-batches — one output row per key per micro-batch that
+    touched it (update semantics), carrying lifetime totals."""
     # key column keeps ITS OWN type — hardcoding LongType would make
     # every non-bigint key (string user ids) fail Arrow serialization
     # on the first emitted batch
@@ -60,64 +34,6 @@ def streaming_running_totals(events: DataFrame, key_col: str = "user_id",
         StructField("n_events", LongType()),
         StructField("total_value", DoubleType()),
     ])
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState(
-                "agg", "n BIGINT, total DOUBLE",
-                ttlDurationMs=ttl_ms)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = 0, 0.0
-            if self._agg.exists():
-                n, total = self._agg.get()
-            for pdf in rows:
-                n += int(len(pdf))
-                total += float(pdf[value_col].fillna(0.0).sum())
-            self._agg.update((n, total))
-            yield pd.DataFrame({key_col: [key[0]], "n_events": [n],
-                                "total_value": [total]})
-
-        def close(self) -> None:
-            pass
-
-    # Spark rejects state TTL under timeMode="None"
-    # (STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL): TTL is
-    # measured in processing time, so requesting it switches the mode.
-    time_mode = "ProcessingTime" if ttl_ms is not None else "None"
-    return (events.groupBy(key_col)
-            .transformWithStateInPandas(statefulProcessor=RunningTotals(),
-                                        outputStructType=out_schema,
-                                        outputMode="Update",
-                                        timeMode=time_mode))
-
-
-def _output_schema(events: DataFrame, key_col: str) -> StructType:
-    # key column keeps ITS OWN type (same reason as the v2 op above)
-    return StructType([
-        StructField(key_col, events.schema[key_col].dataType),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-    ])
-
-
-def streaming_running_totals_v1(events: DataFrame,
-                                key_col: str = "user_id",
-                                value_col: str = "value") -> DataFrame:
-    """``streaming_running_totals`` on the Spark 3.x
-    ``applyInPandasWithState`` API: identical output contract — one
-    (key, n_events, total_value) row per key per micro-batch that
-    touched it, lifetime totals, update semantics. No typed state
-    handles or TTL (v2-only features), but no protobuf dependency
-    either, so it executes on any Python-only deployment. State per
-    key is two scalars — O(distinct keys), independent of volume."""
-    from typing import Any, Iterator, Tuple
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = _output_schema(events, key_col)
-    state_schema = "n long, total double"
 
     def fn(key: Tuple[Any, ...],
            batches: Iterator[pd.DataFrame],
@@ -132,6 +48,6 @@ def streaming_running_totals_v1(events: DataFrame,
 
     return (events.groupBy(key_col)
             .applyInPandasWithState(fn, outputStructType=out_schema,
-                                    stateStructType=state_schema,
+                                    stateStructType="n long, total double",
                                     outputMode="update",
                                     timeoutConf=GroupStateTimeout.NoTimeout))

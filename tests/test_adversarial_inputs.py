@@ -1514,7 +1514,6 @@ def test_nonfinite_embeddings_fail_by_name(spark, tmp_path_factory):
                                "vec_id long, embedding array<double>")
     for entry in (
         lambda: sim.cosine_topk(df, df, k=2).collect(),
-        lambda: sim.cosine_topk(df, df, k=2, method="expr").collect(),
         lambda: sim.lsh_topk(df, k=2, check_unique_ids=False).collect(),
         lambda: sim.ivf_topk_deterministic(
             df, k=2, n_centroids=4, check_unique_ids=False).collect(),
@@ -1529,10 +1528,9 @@ def test_nonfinite_embeddings_fail_by_name(spark, tmp_path_factory):
 
 def test_ragged_dim_embeddings_fail_by_name(spark):
     """A wrong-length vector NULL-pads the zip_with folds, so LSH sign
-    bits, IVF cell distances, and expr-path cosine come out as
-    valid-looking WRONG answers (silently, unless the ragged rows
-    happen to share a GEMM group — where _role_split_gemm already
-    named the defect). Every entry point with a dim literal (or an
+    bits and IVF cell distances come out as valid-looking WRONG
+    answers (silently, unless the ragged rows happen to share a GEMM
+    group — where _role_split_gemm already named the defect). Every entry point with a dim literal (or an
     inferrable one) must reject per-row by name instead."""
     import numpy as np
     from spark_ext_spark.llm import similarity as sim
@@ -1542,7 +1540,6 @@ def test_ragged_dim_embeddings_fail_by_name(spark):
     df = spark.createDataFrame(rows,
                                "vec_id long, embedding array<double>")
     for entry in (
-        lambda: sim.cosine_topk(df, df, k=2, method="expr").collect(),
         lambda: sim.lsh_topk(df, k=2, check_unique_ids=False).collect(),
         lambda: sim.ivf_topk_deterministic(
             df, k=2, n_centroids=4, check_unique_ids=False).collect(),
@@ -1560,12 +1557,10 @@ def test_ragged_dim_embeddings_fail_by_name(spark):
         with pytest.raises(Exception, match="mixed dimensionality"):
             entry()
     # an EMPTY (or all-null-embedding) corpus has no dim and nothing
-    # to mis-rank: both methods return empty instead of the expr
-    # path's dim probe raising at plan build (self-review, round 10)
+    # to mis-rank: the result is empty, not a plan-build error
     from pyspark.sql import functions as F
     empty = df.filter(F.col("vec_id") < 0)
     ok = df.filter(F.col("vec_id") <= 5)
-    assert sim.cosine_topk(ok, empty, k=2, method="expr").count() == 0
     assert sim.cosine_topk(ok, empty, k=2).count() == 0
 
 

@@ -1,40 +1,27 @@
-"""transformWithStateInPandas running totals: state accumulates across
-micro-batches within a run AND across a query restart (checkpoint).
-
-The execution test needs google.protobuf (the transformWithState
-driver-worker wire protocol), absent in this container — it skips
-here and runs on standard Spark 4 deployments. Plan construction is
-asserted unconditionally."""
+"""applyInPandasWithState running totals: state accumulates across
+micro-batches within a run AND across a query restart (checkpoint),
+and the final per-key totals equal a batch groupBy."""
 
 from __future__ import annotations
 
-import importlib.util
-
-import pytest
 from pyspark.sql import functions as F
 
-from spark_ext_spark.streaming import (ROCKSDB_PROVIDER,
-                                       streaming_running_totals)
-
-try:
-    HAS_PROTOBUF = importlib.util.find_spec("google.protobuf") is not None
-except ModuleNotFoundError:
-    HAS_PROTOBUF = False
+from spark_ext_spark.streaming import streaming_running_totals
 
 SCHEMA = "user_id long, value double"
 
 
-def _write_file(spark, d, rows, name):
-    spark.createDataFrame(rows, SCHEMA).coalesce(1) \
+def _write_file(spark, d, rows, name, schema=SCHEMA):
+    spark.createDataFrame(rows, schema).coalesce(1) \
         .write.mode("overwrite").parquet(f"{d}/in/{name}")
 
 
-def _run(spark, d, qname, checkpoint):
+def _run(spark, d, qname, checkpoint, schema=SCHEMA):
     # foreachBatch sink: the memory sink refuses checkpoint RECOVERY
     # ("does not support recovering from checkpoint location"), and
     # the restart half of these tests exists to prove state restore
     out_dir = f"{d}/out/{qname}"
-    stream = (spark.readStream.schema(SCHEMA)
+    stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(f"{d}/in/*"))
     out = streaming_running_totals(stream, "user_id", "value")
     q = (out.writeStream.foreachBatch(
@@ -54,58 +41,14 @@ def _run(spark, d, qname, checkpoint):
                 f"WHERE rn = 1").collect()}
 
 
-@pytest.fixture()
-def rocksdb(spark):
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass",
-                         None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                   ROCKSDB_PROVIDER)
-    yield
-    if old is None:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    else:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-
-
-def test_running_totals_plan_builds(spark):
-    """Operator construction (grouping, schema, output mode) requires
-    no protobuf — assert the unbounded plan and output schema."""
-    stream = (spark.readStream.format("rate").option("rowsPerSecond", 1)
-              .load()
-              .select(F.col("value").alias("user_id"),
-                      F.col("value").cast("double").alias("value")))
-    out = streaming_running_totals(stream, "user_id", "value")
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == \
-        ["user_id", "n_events", "total_value"]
-
-
-def test_running_totals_key_type_and_ttl_plan(spark):
-    """The output schema carries the key column's OWN type (string ids
-    must not be coerced to bigint), and the TTL variant builds — TTL
-    forces ProcessingTime time mode, which Spark validates at plan
-    construction."""
-    stream = (spark.readStream.format("rate").option("rowsPerSecond", 1)
-              .load()
-              .select(F.col("value").cast("string").alias("user_id"),
-                      F.col("value").cast("double").alias("value")))
-    out = streaming_running_totals(stream, "user_id", "value")
-    assert out.schema["user_id"].dataType.simpleString() == "string"
-
-    with_ttl = streaming_running_totals(stream, "user_id", "value",
-                                        ttl_ms=3_600_000)
-    assert with_ttl.isStreaming
-
-
-@pytest.mark.skipif(not HAS_PROTOBUF,
-                    reason="transformWithState driver worker requires "
-                           "google.protobuf (absent in this container)")
-def test_running_totals_across_batches_and_restart(spark, tmp_path, rocksdb):
+def test_running_totals_across_batches_and_restart(spark, tmp_path):
+    """Cross-micro-batch accumulation and checkpoint-restart state
+    restore."""
     d = str(tmp_path)
     ckpt = f"{d}/ckpt"
     _write_file(spark, d, [(1, 1.0), (1, 2.0), (2, 10.0)], "f1")
     _write_file(spark, d, [(1, 4.0), (3, 7.0)], "f2")
-    got = _run(spark, d, "rt1", ckpt)
+    got = _run(spark, d, "rt_1", ckpt)
     # maxFilesPerTrigger=1 → two micro-batches in one run; user 1's
     # state carries from batch 1 into batch 2
     assert got[1] == (3, 7.0)
@@ -114,60 +57,12 @@ def test_running_totals_across_batches_and_restart(spark, tmp_path, rocksdb):
 
     # restart with the same checkpoint + a new file: state restores
     _write_file(spark, d, [(1, 100.0), (2, 0.5)], "f3")
-    got2 = _run(spark, d, "rt2", ckpt)
+    got2 = _run(spark, d, "rt_2", ckpt)
     assert got2[1] == (4, 107.0)
     assert got2[2] == (2, 10.5)
 
 
-def _run_v1(spark, d, qname, checkpoint):
-    from spark_ext_spark.streaming import streaming_running_totals_v1
-    # foreachBatch sink — same checkpoint-recovery reason as _run
-    out_dir = f"{d}/out/{qname}"
-    stream = (spark.readStream.schema(SCHEMA)
-              .option("maxFilesPerTrigger", 1).parquet(f"{d}/in/*"))
-    out = streaming_running_totals_v1(stream, "user_id", "value")
-    q = (out.writeStream.foreachBatch(
-            lambda df, epoch: df.write.mode("append").parquet(out_dir))
-         .outputMode("update").option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    assert not q.isActive
-    spark.read.parquet(out_dir).createOrReplaceTempView(qname)
-    # latest row per key = the one with the highest n_events (Spark
-    # SQL has no QUALIFY; windowed subquery instead)
-    return {r["user_id"]: (r["n_events"], r["total_value"])
-            for r in spark.sql(
-                f"SELECT user_id, n_events, total_value FROM ("
-                f"  SELECT *, row_number() OVER (PARTITION BY user_id "
-                f"  ORDER BY n_events DESC) AS rn FROM {qname}) "
-                f"WHERE rn = 1").collect()}
-
-
-def test_running_totals_v1_across_batches_and_restart(spark, tmp_path):
-    """The applyInPandasWithState twin EXECUTES here (no protobuf wire
-    protocol), so the running-totals semantics — cross-micro-batch
-    accumulation and checkpoint-restart state restore — get executed
-    evidence in this container, with the exact assertions the
-    protobuf-gated v2 test runs on full deployments."""
-    d = str(tmp_path)
-    ckpt = f"{d}/ckpt"
-    _write_file(spark, d, [(1, 1.0), (1, 2.0), (2, 10.0)], "f1")
-    _write_file(spark, d, [(1, 4.0), (3, 7.0)], "f2")
-    got = _run_v1(spark, d, "rtv1_1", ckpt)
-    # maxFilesPerTrigger=1 → two micro-batches in one run; user 1's
-    # state carries from batch 1 into batch 2
-    assert got[1] == (3, 7.0)
-    assert got[2] == (1, 10.0)
-    assert got[3] == (1, 7.0)
-
-    # restart with the same checkpoint + a new file: state restores
-    _write_file(spark, d, [(1, 100.0), (2, 0.5)], "f3")
-    got2 = _run_v1(spark, d, "rtv1_2", ckpt)
-    assert got2[1] == (4, 107.0)
-    assert got2[2] == (2, 10.5)
-
-
-def test_running_totals_v1_matches_batch_ground_truth(spark, tmp_path):
+def test_running_totals_matches_batch_ground_truth(spark, tmp_path):
     """Final per-key totals equal a plain batch groupBy over the same
     files — the streaming statefulness changes WHEN rows are emitted,
     never the lifetime aggregate."""
@@ -176,10 +71,25 @@ def test_running_totals_v1_matches_batch_ground_truth(spark, tmp_path):
     rows2 = [(i % 5, float(2 * i + 1)) for i in range(25)]
     _write_file(spark, d, rows1, "g1")
     _write_file(spark, d, rows2, "g2")
-    got = _run_v1(spark, d, "rtv1_gt", f"{d}/ckpt_gt")
+    got = _run(spark, d, "rt_gt", f"{d}/ckpt_gt")
     truth = {r["user_id"]: (r["n"], r["t"]) for r in
              spark.read.parquet(f"{d}/in/*")
              .groupBy("user_id")
              .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("t"))
              .collect()}
     assert got == truth
+
+
+def test_running_totals_string_key_keeps_its_type(spark, tmp_path):
+    """The output schema carries the key column's OWN type: string ids
+    are neither coerced to bigint in the plan nor rejected by Arrow
+    when the first batch is emitted."""
+    d = str(tmp_path)
+    schema = "user_id string, value double"
+    _write_file(spark, d, [("a", 1.0), ("b", 2.0), ("a", 3.0)], "s1",
+                schema)
+    stream = spark.readStream.schema(schema).parquet(f"{d}/in/*")
+    out = streaming_running_totals(stream, "user_id", "value")
+    assert out.schema["user_id"].dataType.simpleString() == "string"
+    assert _run(spark, d, "rt_str", f"{d}/ckpt_str", schema) == \
+        {"a": (2, 4.0), "b": (1, 2.0)}

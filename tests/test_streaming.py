@@ -5,14 +5,17 @@ equivalent batch computation."""
 from __future__ import annotations
 
 import time
+from datetime import timedelta
 
 import pytest
 from pyspark.sql import functions as F
 
+from spark_ext_spark.llm.dedup import exact_duplicates
+from spark_ext_spark.llm.text import text_stats
+from spark_ext_spark.operators.gather import Gather
 from spark_ext_spark.streaming import (streaming_dedup_exact,
                                        streaming_event_counts,
-                                       streaming_gather,
-                                       streaming_text_quality)
+                                       streaming_gather)
 
 ROWS = [
     ("2024-01-01 00:01:00", 1, "view", 1.0),
@@ -62,6 +65,9 @@ def test_streaming_event_counts(spark, event_stream_dir):
 
 
 def test_streaming_gather(spark, event_stream_dir):
+    """The stream op is batch Gather keyed on (window, pk): on every
+    window the flush row closes, its rows equal Gather over the batch
+    frame."""
     path, batch_df = event_stream_dir
     stream = spark.readStream.schema(batch_df.schema).parquet(path)
     out = streaming_gather(stream, window="10 minutes",
@@ -75,8 +81,23 @@ def test_streaming_gather(spark, event_stream_dir):
     assert got[("2024-01-01 00:00:00", 2)] == [("click", 3.0)]
     assert got[("2024-01-01 00:10:00", 1)] == [("view", 4.0)]
 
+    # closed = window end at or below the watermark the flush row sets
+    watermark = batch_df.agg(F.max("ts")).first()[0] - timedelta(minutes=30)
+    windowed = batch_df.withColumn("win", F.window("ts", "10 minutes"))
+    batch = (Gather(primaryKeyCols=["win", "user_id"], keyCol="event_type",
+                    valueCol="value", outputCol="gathered")
+             .transform(windowed)
+             .where(F.col("win.end") <= F.lit(watermark))
+             .collect())
+    assert got == {(str(r["win"]["start"]), r["user_id"]):
+                   sorted(tuple(kv) for kv in r["gathered"])
+                   for r in batch}
+
 
 def test_streaming_dedup_exact(spark, tmp_path_factory):
+    """Keeps one document per ``exact_duplicates`` group of the same
+    files: the kept digests are the batch digest set, and each kept
+    doc_id is a member of its group."""
     d = tmp_path_factory.mktemp("docs_stream")
     docs = spark.createDataFrame(
         [("2024-01-01 00:00:01", 1, "hello world"),
@@ -88,42 +109,34 @@ def test_streaming_dedup_exact(spark, tmp_path_factory):
     stream = spark.readStream.schema(docs.schema).parquet(str(d / "in"))
     out = streaming_dedup_exact(stream, "ts", "doc_id", "text")
     _run_to_memory(out, "dedup_stream")
-    kept = {r["doc_id"] for r in spark.sql(
-        "SELECT doc_id FROM dedup_stream").collect()}
+    rows = spark.sql("SELECT digest, doc_id FROM dedup_stream").collect()
+    kept = {r["doc_id"] for r in rows}
     assert len(kept) == 2 and 3 in kept
     assert len(kept & {1, 2}) == 1  # exactly one of the dups survives
 
+    groups = {r["digest"]: r["member_ids"] for r in
+              exact_duplicates(docs, "doc_id", "text").collect()}
+    assert sorted(r["digest"] for r in rows) == sorted(groups)
+    assert all(r["doc_id"] in groups[r["digest"]] for r in rows)
 
-def test_streaming_text_quality_stateless(spark, tmp_path_factory):
+
+def test_text_stats_on_stream_matches_batch(spark, tmp_path_factory):
+    """``text_stats`` is a pure per-row select, so it runs on a stream
+    as it is and returns the batch rows."""
     d = tmp_path_factory.mktemp("docs_q")
     docs = spark.createDataFrame(
-        [(1, "The cat sat on the mat"), (2, "123 456 789")],
+        [(1, "The cat sat on the mat"), (2, "123 456 789"),
+         (3, "Hello,  WORLD!\tagain"), (4, "")],
         "doc_id long, text string")
     docs.coalesce(1).write.mode("overwrite").parquet(str(d / "in"))
     stream = spark.readStream.schema(docs.schema).parquet(str(d / "in"))
-    out = streaming_text_quality(stream, "doc_id", "text")
-    _run_to_memory(out, "quality_stream")
+    _run_to_memory(text_stats(stream, "doc_id", "text"), "stats_stream")
     got = {r["doc_id"]: r for r in
-           spark.sql("SELECT * FROM quality_stream").collect()}
+           spark.sql("SELECT * FROM stats_stream").collect()}
+    assert got == {r["doc_id"]: r for r in
+                   text_stats(docs, "doc_id", "text").collect()}
     assert got[1]["n_tokens"] == 6
     assert got[2]["digit_ratio"] > 0.7
-
-
-def test_streaming_enrich_stream_static_join(spark, event_stream_dir):
-    from spark_ext_spark.streaming import streaming_enrich
-    path, batch_df = event_stream_dir
-    dim = spark.createDataFrame(
-        [(1, "gold"), (2, "silver")], "user_id long, tier string")
-    stream = spark.readStream.schema(batch_df.schema).parquet(path)
-    out = streaming_enrich(stream.select("user_id", "value"),
-                           dim, on="user_id")
-    _run_to_memory(out, "enriched_stream")
-    rows = spark.sql("SELECT * FROM enriched_stream").collect()
-    # every input row survives (left join); tiers map per dimension row
-    assert len(rows) == batch_df.count()
-    tiers = {r["user_id"]: r["tier"] for r in rows}
-    assert tiers[1] == "gold" and tiers[2] == "silver"
-    assert tiers[99] is None
 
 
 def test_foreach_batch_upsert(spark, tmp_path):
