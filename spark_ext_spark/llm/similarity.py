@@ -18,6 +18,10 @@
 - ``embedding_near_dups``: cosine near-duplicate pairs (exact sharded
   GEMM or LSH blocking); ``quantize_embeddings``: int8 quantization
   with its reconstruction-error profile.
+
+The approximate paths (LSH and IVF) cache their bucket/cell frame once
+per call, hand it back through ``persisted_out`` for explicit release,
+and check on every call that embedding ids are unique and non-null.
 """
 
 from __future__ import annotations
@@ -32,56 +36,21 @@ from pyspark.sql.window import Window
 
 __all__ = ["cosine_topk", "lsh_buckets", "lsh_topk",
            "fit_ivf_centroids_quantized", "ivf_topk_deterministic",
-           "embedding_near_dups", "drop_artifact_table"]
+           "embedding_near_dups"]
 
 
-def _materialize_artifact(df: DataFrame, storage: str,
-                          table_name: str | None,
-                          persisted_out: list | None = None) -> DataFrame:
-    """Lifecycle seam for ANN intermediates that are read more than
-    once per action (LSH bucket frames, IVF cell assignments).
-
-    ``storage="cache"`` (default): session cache — right for a single
-    query over a corpus that fits executor storage memory. The frame
-    is appended to ``persisted_out`` (if given) so callers can
-    ``.unpersist()`` it explicitly instead of waiting for eviction /
-    ``spark.catalog.clearCache()``.
-
-    ``storage="table"``: write-once-read-many — the frame is EAGERLY
-    written to ``table_name`` in the session warehouse (parquet) and
-    re-read from there, the right shape for a 100 TB curation run
-    where one assignment feeds many queries and must not depend on
-    executor cache residency. Re-invoking with the same name
-    overwrites. Drop with :func:`drop_artifact_table` when the run is
-    done.
-
-    Mismatched arguments raise (same strict contract as
-    ``embedding_near_dups``'s exact path): ``artifact_table`` with
-    ``storage="cache"`` would silently produce no table, and
-    ``persisted_out`` with ``storage="table"`` would silently never be
-    filled — both are caller bugs, not preferences."""
-    if storage == "cache":
-        if table_name:
-            raise ValueError(
-                "artifact_table= is only meaningful with "
-                "storage='table'; storage='cache' would silently "
-                "create no table — drop the argument or switch storage")
-        df = df.cache()
-        if persisted_out is not None:
-            persisted_out.append(df)
-        return df
-    if storage == "table":
-        if persisted_out is not None:
-            raise ValueError(
-                "persisted_out= is only meaningful with "
-                "storage='cache'; a storage='table' artifact is "
-                "released with drop_artifact_table(), not unpersist()")
-        if not table_name:
-            raise ValueError("storage='table' requires artifact_table=")
-        df.write.mode("overwrite").format("parquet").saveAsTable(table_name)
-        return df.sparkSession.table(table_name)
-    raise ValueError(f"unknown storage: {storage!r} "
-                     "(expected 'cache' or 'table')")
+def _materialize_artifact(df: DataFrame, entry: str,
+                          persisted_out: list | None) -> DataFrame:
+    """Cache an ANN intermediate that is read more than once per action
+    (LSH bucket frames, IVF cell assignments), hand it to
+    ``persisted_out`` (if given) so callers can ``.unpersist()`` it
+    explicitly instead of waiting for eviction, and run the upfront
+    unique-id check over it (:func:`_assert_unique_ids`)."""
+    df = df.cache()
+    if persisted_out is not None:
+        persisted_out.append(df)
+    _assert_unique_ids(df, entry)
+    return df
 
 
 def _assert_unique_ids(artifact: DataFrame, entry: str) -> None:
@@ -91,14 +60,12 @@ def _assert_unique_ids(artifact: DataFrame, entry: str) -> None:
     by id hash) but best-effort under LSH/IVF, where same-id rows with
     different vectors can land in disjoint buckets and silently corrupt
     self-exclusion, tie-break, and shard-merge dedup without ever
-    sharing a pandas group. One scalar aggregate over the materialized
-    bucket/cell artifact (Catalyst prunes it to the id column, and the
-    scan doubles as the cache warm-up) gives those paths the same named
-    failure. Nulls count as violations too: a null id defeats the
-    id-keyed self-exclusion and merge on every engine. Callers that
-    re-serve a corpus already verified once (the fit-once/query-many
-    production shape) can skip the scan with
-    ``check_unique_ids=False`` on any approximate entry point."""
+    sharing a pandas group. One scalar aggregate over the cached
+    bucket/cell artifact (the scan doubles as the cache warm-up, so the
+    per-row vector guards fire here first, under their own names) gives
+    those paths the same named failure on every call. Nulls count as
+    violations too: a null id defeats the id-keyed self-exclusion and
+    merge on every engine."""
     row = artifact.agg(
         F.count(F.lit(1)).alias("n"),
         F.count_distinct("vec_id").alias("d")).first()
@@ -108,12 +75,6 @@ def _assert_unique_ids(artifact: DataFrame, entry: str) -> None:
             f"({row['n']} rows, {row['d']} distinct non-null ids); "
             "approximate search keys self-exclusion and candidate "
             "merging on the id — dedupe the corpus upstream")
-
-
-def drop_artifact_table(spark, table_name: str) -> None:
-    """Explicitly end a ``storage="table"`` artifact's lifecycle."""
-    escaped = table_name.replace("`", "``")
-    spark.sql(f"DROP TABLE IF EXISTS `{escaped}`")
 
 
 def _finite_vec(vec: Column, entry: str,
@@ -292,10 +253,7 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
                         n_planes: int = 8, seed: int = 42,
                         round_to: int | None = 4,
                         shard_rows: int = 16384,
-                        storage: str = "cache",
-                        artifact_table: str | None = None,
-                        persisted_out: list | None = None,
-                        check_unique_ids: bool = True) -> DataFrame:
+                        persisted_out: list | None = None) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, sim ≥ τ).
 
     method="exact": all-pairs via the sharded co-group GEMM — the
@@ -309,32 +267,22 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
     buckets (+1-bit multiprobe) — the 100 TB path; recall follows the
     LSH S-curve, candidates come from equi-joins only.
 
-    The storage/artifact_table/persisted_out lifecycle applies to the
-    LSH bucket frame only; the exact path materializes no reusable
-    artifact, so passing them with method="exact" raises instead of
-    silently writing nothing."""
+    ``persisted_out`` receives the cached LSH bucket frame; the exact
+    path caches no artifact, so passing it with method="exact" raises
+    instead of silently handing back nothing."""
     import pandas as pd
 
-    if storage not in ("cache", "table"):
-        raise ValueError(f"unknown storage: {storage!r} "
-                         "(expected 'cache' or 'table')")
-    if method != "lsh" and (storage != "cache" or artifact_table
-                            or persisted_out is not None):
+    if method != "lsh" and persisted_out is not None:
         raise ValueError(
-            "storage/artifact_table/persisted_out apply to method='lsh' "
-            "only — the exact path has no reusable artifact to persist")
+            "persisted_out applies to method='lsh' only — the exact "
+            "path has no cached artifact to release")
     if method == "lsh":
-        # materialized because BOTH sides of the bucket self-join below
-        # read it (a join, unlike the q/c unions elsewhere, genuinely
-        # needs two inputs). storage="table" (+ artifact_table=) writes
-        # it once to the warehouse instead — the multi-query / 100 TB
-        # lifecycle; storage="cache" hands the frame to persisted_out
-        # for explicit release.
+        # cached because BOTH sides of the bucket self-join below read
+        # it (a join, unlike the q/c unions elsewhere, genuinely needs
+        # two inputs)
         b = _materialize_artifact(
             lsh_buckets(df, n_planes, seed, id_col, vec_col),
-            storage, artifact_table, persisted_out)
-        if check_unique_ids:
-            _assert_unique_ids(b, "embedding_near_dups[lsh]")
+            "embedding_near_dups[lsh]", persisted_out)
         probes = F.array(F.col("bucket"),
                          *[F.col("bucket").bitwiseXOR(F.lit(1 << p))
                            for p in range(n_planes)])
@@ -488,10 +436,7 @@ def lsh_topk(df: DataFrame, k: int, n_planes: int = 8, seed: int = 42,
              multiprobe: bool = True,
              round_to: int | None = None,
              shard_rows: int = 16384,
-             storage: str = "cache",
-             artifact_table: str | None = None,
              persisted_out: list | None = None,
-             check_unique_ids: bool = True,
              dim: int | None = None) -> DataFrame:
     """Approximate top-k within LSH buckets; multiprobe also searches
     the n_planes 1-bit-adjacent buckets (recall boost without widening
@@ -513,16 +458,11 @@ def lsh_topk(df: DataFrame, k: int, n_planes: int = 8, seed: int = 42,
     per-row _finite_vec guard instead of mis-projecting."""
     import pandas as pd
 
-    # materialized: the candidate explode and the block grid's
-    # bucket-sizing aggregate both read the bucket projection.
-    # storage="table" persists it to the warehouse (the multi-query /
-    # 100 TB lifecycle); storage="cache" + persisted_out gives the
-    # caller an explicit unpersist handle.
+    # cached: the candidate explode and the block grid's bucket-sizing
+    # aggregate both read the bucket projection
     b = _materialize_artifact(
         lsh_buckets(df, n_planes, seed, id_col, vec_col, dim=dim),
-        storage, artifact_table, persisted_out)
-    if check_unique_ids:
-        _assert_unique_ids(b, "lsh_topk")
+        "lsh_topk", persisted_out)
     if multiprobe:
         probes = F.array(F.col("bucket"),
                          *[F.col("bucket").bitwiseXOR(F.lit(1 << p))
@@ -735,10 +675,7 @@ def ivf_topk_deterministic(df: DataFrame, k: int, n_centroids: int = 16,
                            round_to: int = 4,
                            centroids: list[list[int]] | None = None,
                            shard_rows: int = 16384,
-                           storage: str = "cache",
-                           artifact_table: str | None = None,
-                           persisted_out: list | None = None,
-                           check_unique_ids: bool = True) -> DataFrame:
+                           persisted_out: list | None = None) -> DataFrame:
     """IVF ANN over the quantized-Lloyd coarse quantizer (vs
     lsh_topk's data-oblivious hyperplanes): the corpus becomes inverted
     lists (one cell per vector), and each query probes its
@@ -767,17 +704,12 @@ def ivf_topk_deterministic(df: DataFrame, k: int, n_centroids: int = 16,
                        x * F.lit(float(IVF_QUANT_SCALE))).cast("long"))
                    .alias("qv")))
     cbd = _ivf_cells_by_dist(centroids)
-    # materialized: the explode branch and the block grid's sizing
-    # aggregate both read the interpreted n_centroids × dim distance
-    # fold, and unmaterialized each reader re-evaluates it (measured
-    # 2-3× slower). storage="table" writes the assignment once to the
-    # warehouse for multi-query / 100 TB runs (drop it with
-    # drop_artifact_table); persisted_out gives explicit cache release
+    # cached: the explode branch and the block grid's sizing aggregate
+    # both read the interpreted n_centroids × dim distance fold, and
+    # uncached each reader re-evaluates it (measured 2-3× slower)
     emb = _materialize_artifact(
         emb.withColumn("__cbd", cbd).drop("qv"),
-        storage, artifact_table, persisted_out)
-    if check_unique_ids:
-        _assert_unique_ids(emb, "ivf_topk_deterministic")
+        "ivf_topk_deterministic", persisted_out)
     probes = F.transform(F.slice("__cbd", 1, n_probes), lambda s: s["cell"])
     both = _explode_roles(emb, probes, "cell")  # member cell = probes[0]
     return _grouped_candidate_topk(both, "cell", k,

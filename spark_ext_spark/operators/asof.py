@@ -25,8 +25,8 @@ driver-collected partition map, so ANY recompute (cache eviction,
 executor loss, a released intermediate) reproduces the identical
 answer. Both strategies produce identical output for any input
 (differential-tested, including an engineered single hot key and the
-non-orderable-struct tiebreak); ``strategy="auto"`` measures max
-per-key rows once and picks.
+non-orderable-struct tiebreak). The caller picks the strategy: an
+automatic pick would need a full key-count job on every call.
 
 Carrying one struct (not one window per value column) is load-bearing
 for semantics, not just cost: all values come from the SAME right row,
@@ -57,79 +57,11 @@ the same output; DuckDB itself leaves this case undefined.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 from pyspark.sql.window import Window
-
-# Session-scoped sizing cache for strategy="auto": (left key plan,
-# right key plan) -> hottest-key row count. The histogram depends
-# only on the key projections, so N as-of joins over the same tables —
-# regardless of value_cols — pay ONE sizing job. Keyed on the ANALYZED
-# plan (semanticHash widened with the key column name/type — the
-# residual collision probability across two 64-bit pairs is
-# negligible, and a collision's worst case is a suboptimal strategy
-# pick, corrected by passing strategy or hottest_key_count
-# explicitly). The key also folds in a hash of the plan's input-file
-# listing (driver-side catalog call, no scan) so a parquet path
-# re-written under the same plan — new part-file names — re-sizes
-# automatically; an IN-PLACE overwrite that keeps identical file names
-# still needs clear_hot_key_cache(). FIFO-capped so an unbounded
-# stream of distinct table pairs can't grow the driver dict for the
-# session lifetime.
-_HOTKEY_CACHE: dict[tuple, int] = {}
-_HOTKEY_CACHE_MAX = 1024
-_sizing_runs = 0  # test seam: counts actual sizing jobs executed
-
-
-def clear_hot_key_cache() -> None:
-    """Drop cached auto-strategy key histograms (use after the data
-    under a previously sized table path has been rewritten)."""
-    _HOTKEY_CACHE.clear()
-
-
-# Per-DataFrame memo of the input-file-listing hash: a DataFrame's
-# FileIndex is frozen at creation, so the listing cannot change for a
-# given df object — but df.inputFiles() re-ships every path through
-# py4j on each call, which a pipeline composing N auto-strategy as-of
-# joins over one wide table (100k part files) would otherwise pay per
-# join just to build a cache key. Weak keys: the memo never extends a
-# DataFrame's lifetime.
-_FILES_HASH_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
-
-def _files_hash(df: DataFrame) -> int | None:
-    try:
-        return _FILES_HASH_MEMO[df]
-    except (KeyError, TypeError):
-        pass
-    try:
-        h = hash(tuple(sorted(df.inputFiles())))
-    except Exception:  # noqa: BLE001 — listing is best-effort
-        h = None
-    try:
-        _FILES_HASH_MEMO[df] = h
-    except TypeError:  # un-weakref-able subclass: skip the memo
-        pass
-    return h
-
-
-def _key_plan_hash(df: DataFrame, col: str) -> tuple | None:
-    """Stable-within-session identity of the key projection: analyzed
-    plan semanticHash widened with the column name, type, and a hash
-    of the plan's input-file listing (so rewritten paths — which get
-    fresh part-file names — invalidate naturally; memoized per df
-    object, whose frozen FileIndex makes the listing immutable); None
-    when the API is unavailable (e.g. Spark Connect)."""
-    try:
-        proj = df.select(F.col(col))
-        return (int(proj.semanticHash()), col,
-                proj.schema[0].dataType.simpleString(), _files_hash(df))
-    except Exception:  # noqa: BLE001 — cache is best-effort
-        return None
 
 
 def _orderable(dt: DataType) -> bool:
@@ -233,11 +165,8 @@ def _bucket_expr(ts_num: Column, bounds: list[float]) -> Column:
 
 
 def _carried_chunked(unioned: DataFrame, tiebreak: Column,
-                     r_struct_t: DataType,
                      num_partitions: int | None = None,
-                     persisted_out: list | None = None,
-                     storage_level: StorageLevel | None = None,
-                     checkpoint: bool = False) -> DataFrame:
+                     persisted_out: list | None = None) -> DataFrame:
     """Two-phase last-observation-carried-forward with NO per-key task
     ceiling and no materialization-dependent state:
 
@@ -270,14 +199,13 @@ def _carried_chunked(unioned: DataFrame, tiebreak: Column,
     Cost: one eager quantile pass + one hash shuffle on (chunk, key)
     + a summary-sized carry join, vs the windowed plan's single hash
     shuffle — buy the extra passes only when a key can exceed a task
-    (``asof_join(strategy=...)`` chooses).
+    (the caller chooses via ``asof_join(strategy=...)``).
 
-    ``persisted_out`` / ``storage_level`` / ``checkpoint`` are purely
-    PERFORMANCE seams: the persisted intermediate keeps the heavy
-    slice window from running twice (output + summary branches share
-    the shuffle exchange either way; only the window on top would
-    re-run). Releasing it early — or losing it — costs a recompute,
-    never a wrong answer."""
+    The intermediate is persisted (handed back via ``persisted_out``)
+    so the heavy slice window does not run twice (output + summary
+    branches share the shuffle exchange either way; only the window on
+    top would re-run). Releasing it early — or losing it — costs a
+    recompute, never a wrong answer."""
     spark = unioned.sparkSession
     n = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "200"))
@@ -296,16 +224,9 @@ def _carried_chunked(unioned: DataFrame, tiebreak: Column,
                  .orderBy("__ts", "__side", "__tb")
                  .rowsBetween(Window.unboundedPreceding,
                               Window.currentRow))))
-    if checkpoint:
-        # reliable materialization: still useful to truncate lineage
-        # on long pipelines (requires setCheckpointDir); no longer a
-        # correctness requirement
-        local = local.checkpoint(eager=True)
-    else:
-        local = local.persist(storage_level
-                              or StorageLevel.MEMORY_AND_DISK_DESER)
-        if persisted_out is not None:
-            persisted_out.append(local)
+    local = local.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    if persisted_out is not None:
+        persisted_out.append(local)
     # one row per (chunk, key) slice: the slice's last row's running
     # carry IS its last non-null right struct (null when it saw no
     # right rows). Ties on the full sort tuple can only be rows whose
@@ -335,20 +256,14 @@ def _carried_chunked(unioned: DataFrame, tiebreak: Column,
             .withColumn("__c", F.coalesce("__c_loc", "__carry_v")))
 
 
-
-
 def asof_join(left: DataFrame, right: DataFrame, on: str,
               left_ts: str, right_ts: str,
               value_cols: list[str] | None = None,
               right_on: str | None = None,
               suffix: str = "_asof",
               strategy: str = "window",
-              hot_key_threshold: int = 5_000_000,
               num_partitions: int | None = None,
-              persisted_out: list | None = None,
-              storage_level: StorageLevel | None = None,
-              checkpoint: bool = False,
-              hottest_key_count: int | None = None) -> DataFrame:
+              persisted_out: list | None = None) -> DataFrame:
     """Append, to every left row, ``value_cols`` (default: all non-key,
     non-ts right columns) from the latest right row at or before the
     left row's timestamp; nulls when no prior right row exists.
@@ -362,26 +277,15 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
     count — the number of quantile slices a hot key is spread over
     (default: ``spark.sql.shuffle.partitions``), not the shuffle's
     task count, which stays governed by the session setting. Identical
-    output for any input. ``"auto"`` runs one
-    counting aggregate over the tagged union and picks ``"chunked"``
-    iff the hottest key exceeds ``hot_key_threshold`` rows — an eager
-    job at call time, amortized two ways: the result is cached per
-    (left key plan, right key plan) for the session (N as-of joins
-    over the same tables pay one sizing job; ``clear_hot_key_cache()``
-    after rewriting data under an identical plan), and
-    ``hottest_key_count`` lets a caller who already knows the key
-    histogram (table stats, a prior profile) skip the job entirely.
-    The measured local[32]/128 GB crossover is 6-23M hot
-    rows (SCALE.md "Engineered-skew A/B"); the 5M default sits below
-    it on purpose — real cluster tasks get a few GB, and the windowed
-    plan's single hot task hits spill/OOM long before it stops being
-    fast on a 128 GB box. ``persisted_out`` receives the chunked plan's
-    persisted intermediate for explicit release (else it lives until
-    cache eviction); ``storage_level``/``checkpoint`` tune how that
-    intermediate is materialized. All three are performance seams
-    only — the chunked plan is a deterministic function of row values,
-    so releasing or losing the intermediate costs a recompute, never a
-    wrong answer (see :func:`_carried_chunked`)."""
+    output for any input. The measured local[32]/128 GB crossover is
+    6-23M hot rows (SCALE.md "Engineered-skew A/B"); real cluster
+    tasks get a few GB, so the windowed plan's single hot task hits
+    spill/OOM earlier there. ``persisted_out`` receives the chunked
+    plan's persisted intermediate for explicit release (else it lives
+    until cache eviction) — a performance seam only: the chunked plan
+    is a deterministic function of row values, so releasing or losing
+    the intermediate costs a recompute, never a wrong answer (see
+    :func:`_carried_chunked`)."""
     right_key = right_on or on
     if value_cols is None:
         value_cols = [c for c in right.columns
@@ -415,43 +319,14 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
             l_tagged.schema["__l"].dataType).alias("__l"),
         F.struct(*[F.col(c) for c in value_cols]).alias("__r"))
 
-    if strategy not in ("window", "chunked", "auto"):
-        raise ValueError(f"unknown asof_join strategy: {strategy!r}")
-    if checkpoint and persisted_out is not None:
-        # same strict contract as the ANN artifact lifecycle: a
-        # checkpointed intermediate is not cache-released, so a caller
-        # wiring 'for fr in held: fr.unpersist()' would silently no-op
-        raise ValueError(
-            "persisted_out= is only meaningful without checkpoint=True; "
-            "a checkpointed intermediate is reclaimed by cleaning the "
-            "checkpoint directory, not by unpersist()")
-    if checkpoint and storage_level is not None:
-        raise ValueError("storage_level= and checkpoint=True are "
-                         "mutually exclusive materialization modes")
+    if strategy not in ("window", "chunked"):
+        raise ValueError(f"unknown asof_join strategy: {strategy!r} "
+                         "(expected 'window' or 'chunked')")
     unioned = l_tagged.unionByName(r_tagged)
     tiebreak = _tiebreak(F.col("__r"), r_struct_t)
-    if strategy == "auto":
-        hottest = hottest_key_count
-        if hottest is None:
-            lh = _key_plan_hash(left, on)
-            rh = _key_plan_hash(right, right_key)
-            ck = (lh, rh) if lh is not None and rh is not None else None
-            if ck is not None and ck in _HOTKEY_CACHE:
-                hottest = _HOTKEY_CACHE[ck]
-            else:
-                hottest = (unioned.groupBy("__key").count()
-                           .agg(F.max("count")).first()[0]) or 0
-                global _sizing_runs
-                _sizing_runs += 1
-                if ck is not None:
-                    if len(_HOTKEY_CACHE) >= _HOTKEY_CACHE_MAX:
-                        _HOTKEY_CACHE.pop(next(iter(_HOTKEY_CACHE)))
-                    _HOTKEY_CACHE[ck] = hottest
-        strategy = "chunked" if hottest > hot_key_threshold else "window"
     if strategy == "chunked":
-        carried = _carried_chunked(unioned, tiebreak, r_struct_t,
-                                   num_partitions, persisted_out,
-                                   storage_level, checkpoint)
+        carried = _carried_chunked(unioned, tiebreak, num_partitions,
+                                   persisted_out)
     else:
         # right rows at the same ts sort before left rows → inclusive
         # match; the trailing tiebreak orders right rows tied on

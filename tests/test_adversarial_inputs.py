@@ -1409,20 +1409,6 @@ def test_hourly_grid_explosion_raises_named_error(spark,
             q(spark, d).collect()
 
 
-def test_unique_id_check_is_optional_for_verified_corpora(spark):
-    """check_unique_ids=False skips the upfront uniqueness scan — the
-    fit-once/query-many production shape where the corpus was verified
-    at ingest and one scalar agg per query is pure overhead. Default
-    stays ON (the duplicate-id test above)."""
-    from spark_ext_spark.llm.similarity import lsh_topk
-    df = spark.createDataFrame(
-        [(1, [1.0, 2.0]), (2, [0.5, 0.1]), (2, [-0.5, -0.1]),
-         (3, [0.2, 0.9])],
-        "vec_id long, embedding array<double>")
-    out = lsh_topk(df, k=2, check_unique_ids=False)  # no upfront raise
-    assert out.count() >= 0
-
-
 def test_lattice_domain_guard_boundary(spark, tmp_path_factory):
     """Exact threshold pin: vq = 3037000498 (value 3037.000498) is the
     last admitted lattice point — the query runs; one lattice step up
@@ -1514,9 +1500,9 @@ def test_nonfinite_embeddings_fail_by_name(spark, tmp_path_factory):
                                "vec_id long, embedding array<double>")
     for entry in (
         lambda: sim.cosine_topk(df, df, k=2).collect(),
-        lambda: sim.lsh_topk(df, k=2, check_unique_ids=False).collect(),
+        lambda: sim.lsh_topk(df, k=2).collect(),
         lambda: sim.ivf_topk_deterministic(
-            df, k=2, n_centroids=4, check_unique_ids=False).collect(),
+            df, k=2, n_centroids=4).collect(),
         lambda: sim.embedding_near_dups(df, method="exact").collect(),
         lambda: sim.quantize_embeddings(df).collect(),
         lambda: sim.quantize_embeddings(df, method="expr").collect(),
@@ -1540,11 +1526,10 @@ def test_ragged_dim_embeddings_fail_by_name(spark):
     df = spark.createDataFrame(rows,
                                "vec_id long, embedding array<double>")
     for entry in (
-        lambda: sim.lsh_topk(df, k=2, check_unique_ids=False).collect(),
+        lambda: sim.lsh_topk(df, k=2).collect(),
         lambda: sim.ivf_topk_deterministic(
-            df, k=2, n_centroids=4, check_unique_ids=False).collect(),
-        lambda: sim.embedding_near_dups(df, method="lsh",
-                                        check_unique_ids=False).collect(),
+            df, k=2, n_centroids=4).collect(),
+        lambda: sim.embedding_near_dups(df, method="lsh").collect(),
     ):
         with pytest.raises(Exception,
                            match="dimensionality differs"):

@@ -112,13 +112,18 @@ def _norm_rows(df, map_col=None):
     return sorted(out, key=repr)
 
 
-def test_asof_chunked_equals_windowed_on_hot_key(spark):
+def test_asof_chunked_equals_windowed_on_hot_key(spark, count_jobs):
     """Differential: an engineered single hot key (thousands of rows,
     heavy (key, ts) ties) plus sparse keys — the chunked two-phase
     carry must reproduce the windowed plan's output exactly, across
     many forced partition boundaries (num_partitions=7, so the hot
     key's carry crosses several boundaries, including tie groups split
-    mid-partition)."""
+    mid-partition).
+
+    Building either plan pins its eager work, which is why the caller
+    picks the strategy rather than a sizing job: the windowed plan
+    launches no job, the chunked plan only its quantile pass (2
+    jobs)."""
     right = spark.range(3000).select(
         F.lit(0).alias("k"),
         F.pmod(F.col("id") * 7, F.lit(501)).alias("rts"),
@@ -133,10 +138,14 @@ def test_asof_chunked_equals_windowed_on_hot_key(spark):
         [(1, 5, -1), (1, 11, -2), (2, 3, -3)],
         "k long, ts long, lid long"))
     kw = dict(on="k", left_ts="ts", right_ts="rts", value_cols=["price"])
-    win = asof_join(left, right, **kw)
+    plans: list = []
+    assert count_jobs(lambda: plans.append(
+        asof_join(left, right, strategy="window", **kw))) == 0
     held = []
-    chk = asof_join(left, right, strategy="chunked", num_partitions=7,
-                    persisted_out=held, **kw)
+    assert count_jobs(lambda: plans.append(
+        asof_join(left, right, strategy="chunked", num_partitions=7,
+                  persisted_out=held, **kw))) == 2
+    win, chk = plans
     assert _norm_rows(chk) == _norm_rows(win)
     # the intermediate is handed back for explicit release
     assert held and held[0].is_cached
@@ -162,39 +171,14 @@ def test_asof_chunked_map_value_uses_hash_tiebreak(spark):
     assert _norm_rows(chk, "m_asof") == _norm_rows(win, "m_asof")
 
 
-def test_asof_auto_strategy_measures_and_picks(spark):
-    """strategy='auto' counts the hottest key once: above the
-    threshold it runs the chunked plan (observable via persisted_out),
-    below it the windowed plan — identical results either way."""
-    right = spark.createDataFrame(
-        [(0, t, float(t)) for t in range(40)] + [(1, 3, -1.0)],
-        "k long, rts long, price double")
-    left = spark.createDataFrame(
-        [(0, t, t) for t in range(0, 40, 3)] + [(1, 9, 99), (2, 1, 42)],
-        "k long, ts long, lid long")
-    kw = dict(on="k", left_ts="ts", right_ts="rts", value_cols=["price"])
-    baseline = _norm_rows(asof_join(left, right, **kw))
-    hot_held: list = []
-    hot = asof_join(left, right, strategy="auto", hot_key_threshold=10,
-                    num_partitions=4, persisted_out=hot_held, **kw)
-    assert _norm_rows(hot) == baseline
-    assert hot_held, "auto above threshold must take the chunked plan"
-    hot_held[0].unpersist()
-    cold_held: list = []
-    cold = asof_join(left, right, strategy="auto",
-                     hot_key_threshold=10_000,
-                     persisted_out=cold_held, **kw)
-    assert _norm_rows(cold) == baseline
-    assert cold_held == [], "auto below threshold must stay windowed"
-
-
 def test_asof_unknown_strategy_raises(spark):
     left = spark.createDataFrame([(1, 1)], "k long, ts long")
     right = spark.createDataFrame([(1, 1, 2.0)], "k long, rts long, v double")
     import pytest
-    with pytest.raises(ValueError, match="strategy"):
-        asof_join(left, right, on="k", left_ts="ts", right_ts="rts",
-                  strategy="bogus")
+    for bogus in ("bogus", "auto"):
+        with pytest.raises(ValueError, match="strategy"):
+            asof_join(left, right, on="k", left_ts="ts", right_ts="rts",
+                      strategy=bogus)
 
 
 def test_asof_chunked_boundary_summary_orders_by_key_first(spark):
@@ -257,55 +241,6 @@ def test_asof_chunked_equals_windowed_randomized(spark):
                 fr.unpersist()
 
 
-def test_asof_auto_sizing_job_cached_per_key_plan(spark):
-    """A second auto call over the same tables must NOT run another
-    sizing job: the hottest-key count is cached per (left key plan,
-    right key plan) — asserted via the module's sizing-run counter —
-    and a caller-supplied hottest_key_count skips the job entirely."""
-    from spark_ext_spark.operators import asof as asof_mod
-    right = spark.createDataFrame([(0, t, float(t)) for t in range(20)],
-                                  "k long, rts long, price double")
-    left = spark.createDataFrame([(0, t, t) for t in range(5)],
-                                 "k long, ts long, lid long")
-    kw = dict(on="k", left_ts="ts", right_ts="rts", value_cols=["price"])
-    asof_mod.clear_hot_key_cache()
-    runs0 = asof_mod._sizing_runs
-    a = asof_join(left, right, strategy="auto", **kw)
-    assert a.count() == 5
-    assert asof_mod._sizing_runs == runs0 + 1
-    # same tables, different value selection: still one cached entry
-    b = asof_join(left, right, strategy="auto", **kw)
-    assert b.count() == 5
-    assert asof_mod._sizing_runs == runs0 + 1, "second auto call re-sized"
-    # explicit histogram: no sizing job and the choice honors it
-    held: list = []
-    c = asof_join(left, right, strategy="auto", hottest_key_count=50,
-                  hot_key_threshold=10, num_partitions=3,
-                  persisted_out=held, **kw)
-    assert c.count() == 5
-    assert asof_mod._sizing_runs == runs0 + 1
-    assert held, "hottest_key_count above threshold must go chunked"
-    held[0].unpersist()
-    asof_mod.clear_hot_key_cache()
-
-
-def test_asof_checkpoint_rejects_cache_lifecycle_args(spark):
-    """checkpoint=True materializes reliably — an unpersist handle or
-    a storage level would silently not apply, so both raise (same
-    strict contract as the ANN artifact lifecycle)."""
-    import pytest
-    from pyspark import StorageLevel
-    left = spark.createDataFrame([(1, 1)], "k long, ts long")
-    right = spark.createDataFrame([(1, 1, 2.0)], "k long, rts long, v double")
-    kw = dict(on="k", left_ts="ts", right_ts="rts")
-    with pytest.raises(ValueError, match="persisted_out"):
-        asof_join(left, right, strategy="chunked", checkpoint=True,
-                  persisted_out=[], **kw)
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        asof_join(left, right, strategy="chunked", checkpoint=True,
-                  storage_level=StorageLevel.MEMORY_AND_DISK_2, **kw)
-
-
 def test_asof_null_timestamps_follow_predicate_semantics(spark):
     """left_ts >= right_ts is three-valued: NULL on either side never
     matches. A null-rts right row must NOT be LOCF-carried into left
@@ -346,37 +281,6 @@ def test_asof_null_keys_follow_predicate_semantics(spark):
                         right_ts="rts", strategy=strat)
         got = sorted((r["lid"], r["v_asof"]) for r in out.collect())
         assert got == expected, strat
-
-
-def test_asof_auto_sizing_cache_invalidates_on_rewritten_path(spark,
-                                                              tmp_path):
-    """Rewriting the parquet under a previously-sized path produces
-    new part-file names, and the cache key folds in the input-file
-    listing — so the second auto call re-sizes instead of trusting a
-    stale hottest-key count (round-7 ADVICE: mutating tables under
-    long-lived sessions shouldn't need manual clear_hot_key_cache)."""
-    from spark_ext_spark.operators import asof as asof_mod
-    p = str(tmp_path / "right_pq")
-    spark.createDataFrame([(0, t, float(t)) for t in range(10)],
-                          "k long, rts long, price double") \
-         .coalesce(1).write.mode("overwrite").parquet(p)
-    left = spark.createDataFrame([(0, t, t) for t in range(5)],
-                                 "k long, ts long, lid long")
-    kw = dict(on="k", left_ts="ts", right_ts="rts", value_cols=["price"])
-    asof_mod.clear_hot_key_cache()
-    runs0 = asof_mod._sizing_runs
-    assert asof_join(left, spark.read.parquet(p), strategy="auto",
-                     **kw).count() == 5
-    assert asof_mod._sizing_runs == runs0 + 1
-    # overwrite IN PLACE: same path, same schema, fresh part files
-    spark.createDataFrame([(0, t, float(t)) for t in range(30)],
-                          "k long, rts long, price double") \
-         .coalesce(1).write.mode("overwrite").parquet(p)
-    assert asof_join(left, spark.read.parquet(p), strategy="auto",
-                     **kw).count() == 5
-    assert asof_mod._sizing_runs == runs0 + 2, (
-        "rewritten path must invalidate the sizing cache")
-    asof_mod.clear_hot_key_cache()
 
 
 def test_chunked_query_result_survives_frame_release(spark):

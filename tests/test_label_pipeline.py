@@ -62,32 +62,3 @@ def test_persisted_labels_feed_report_and_kept_corpus(spark, tmp_path):
     for src, (n_docs, k, _chars, red) in standalone.items():
         assert per_source.get(src, 0) == k
         assert red == round(1.0 - k / n_docs, 4)
-
-
-def test_asof_chunked_checkpoint_mode(spark, tmp_path):
-    """checkpoint=True reliably materializes the chunked intermediate
-    (recompute-hazard hardening for executor loss): results stay
-    identical to the windowed plan. Lives in this module (not
-    test_asof.py) because it sets a checkpoint dir, which must not
-    happen before test_clusters.py's no-dir error-path test."""
-    from spark_ext_spark.operators.asof import asof_join
-    from tests.test_asof import _norm_rows
-    # set-only-if-empty, same pattern as the label-pipeline test
-    # above: a checkpoint dir cannot be UNSET on a live context, so
-    # "restore" is impossible when none was set — reuse an existing
-    # one instead of replacing it with a function-scoped tmp dir
-    sc = spark.sparkContext
-    if sc._jsc.sc().getCheckpointDir().isEmpty():
-        sc.setCheckpointDir(str(tmp_path / "asof_ckpt"))
-    right = spark.createDataFrame(
-        [(k, t, float(10 * k + t)) for k in range(3) for t in range(30)],
-        "k long, rts long, price double")
-    left = spark.createDataFrame(
-        [(k, t, 100 * k + t) for k in range(3) for t in range(1, 30, 4)],
-        "k long, ts long, lid long")
-    kw = dict(on="k", left_ts="ts", right_ts="rts",
-              value_cols=["price"])
-    win = _norm_rows(asof_join(left, right, **kw))
-    chk = asof_join(left, right, strategy="chunked",
-                    num_partitions=5, checkpoint=True, **kw)
-    assert _norm_rows(chk) == win

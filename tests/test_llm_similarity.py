@@ -296,43 +296,10 @@ def test_zero_norm_vectors_do_not_poison_gemm(spark):
     assert len(zq) == 3 and all(r["sim"] == 0.0 for r in zq)
 
 
-def _topk_rows(df):
-    return sorted(tuple(r) for r in
-                  df.select("query_id", "neighbor_id", "rank").collect())
-
-
-def test_artifact_storage_table_mode_matches_cache(spark, vecs):
-    """storage='table' writes the ANN intermediate (IVF cell
-    assignment / LSH bucket frame) to a warehouse table and reads it
-    back — results identical to the cache mode, table visible while
-    the run lives, gone after drop_artifact_table."""
-    from spark_ext_spark.llm.similarity import (drop_artifact_table,
-                                                ivf_topk_deterministic)
-    cached = ivf_topk_deterministic(vecs, k=3, n_centroids=4, n_probes=2)
-    tname = "t_ann_ivf_cells"
-    tabled = ivf_topk_deterministic(vecs, k=3, n_centroids=4, n_probes=2,
-                                    storage="table", artifact_table=tname)
-    assert _topk_rows(tabled) == _topk_rows(cached)
-    assert spark.catalog.tableExists(tname)
-    drop_artifact_table(spark, tname)
-    assert not spark.catalog.tableExists(tname)
-
-    lsh_cached = embedding_near_dups(vecs, threshold=0.8, method="lsh")
-    lsh_tabled = embedding_near_dups(vecs, threshold=0.8, method="lsh",
-                                     storage="table",
-                                     artifact_table="t_ann_lsh_buckets")
-    pairs = lambda df: sorted((r["id_a"], r["id_b"])        # noqa: E731
-                              for r in df.collect())
-    assert pairs(lsh_tabled) == pairs(lsh_cached)
-    assert spark.catalog.tableExists("t_ann_lsh_buckets")
-    drop_artifact_table(spark, "t_ann_lsh_buckets")
-    assert not spark.catalog.tableExists("t_ann_lsh_buckets")
-
-
 def test_artifact_cache_mode_exposes_release_handle(spark, vecs):
-    """storage='cache' (the default) hands the cached frame to
-    persisted_out so callers release it deterministically instead of
-    leaning on clearCache()/eviction."""
+    """The cached bucket frame is handed to persisted_out so callers
+    release it deterministically instead of leaning on
+    clearCache()/eviction."""
     held: list = []
     out = lsh_topk(vecs, k=3, persisted_out=held)
     out.count()
@@ -341,30 +308,12 @@ def test_artifact_cache_mode_exposes_release_handle(spark, vecs):
     assert not held[0].is_cached
 
 
-def test_artifact_storage_validation(vecs):
-    from spark_ext_spark.llm.similarity import ivf_topk_deterministic
-    with pytest.raises(ValueError, match="artifact_table"):
-        ivf_topk_deterministic(vecs, k=2, n_centroids=4, storage="table")
-    with pytest.raises(ValueError, match="storage"):
-        lsh_topk(vecs, k=2, storage="s3")
-    # mismatched lifecycle args are caller bugs, not preferences —
-    # every entry point shares _materialize_artifact's strict check
-    with pytest.raises(ValueError, match="artifact_table"):
-        lsh_topk(vecs, k=2, storage="cache", artifact_table="t_x")
-    with pytest.raises(ValueError, match="persisted_out"):
-        ivf_topk_deterministic(vecs, k=2, n_centroids=4, storage="table",
-                               artifact_table="t_x", persisted_out=[])
-
-
 def test_near_dups_exact_rejects_artifact_args(vecs):
-    """The storage lifecycle belongs to the LSH bucket frame; on the
-    exact path it used to be silently ignored — a caller believing the
-    artifact was persisted must get an error instead."""
+    """The persisted_out handle belongs to the LSH bucket frame; the
+    exact path caches nothing, so a caller expecting an artifact to
+    release gets an error instead of an empty handle."""
     with pytest.raises(ValueError, match="method='lsh'"):
-        embedding_near_dups(vecs, method="exact", storage="table",
-                            artifact_table="t_x")
-    with pytest.raises(ValueError, match="storage"):
-        embedding_near_dups(vecs, method="lsh", storage="s3")
+        embedding_near_dups(vecs, method="exact", persisted_out=[])
 
 
 def test_lsh_topk_explicit_dim_matches_probe(vecs):

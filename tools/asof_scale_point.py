@@ -1,8 +1,8 @@
 """One-decade-up as-of join scale point (round 9, VERDICT item 5).
 
 SCALE.md's window/chunked crossover (6-23M hot rows) interpolated from
-one measurement family; this adds a ~100M-hot-row point so the
-`strategy="auto"` threshold interpolates instead of extrapolating.
+one measurement family; this adds a ~100M-hot-row point so that
+crossover interpolates instead of extrapolating.
 Same skew construction as tools/skew_bench.py's as-of arms (sf0.1
 events amplified ×SKEW_AMPLIFY, 90% of rows re-keyed to one user) —
 but at this decade the instrument necessarily changes in two ways,
