@@ -32,33 +32,13 @@ __all__ = [
 
 
 def register_sql_functions(spark) -> None:
-    """Expose the engine's scalar functions to pure-SQL users:
-
-    - ``s2_token(lat, lon, level)`` — S2 cell token (pandas UDF);
-    - ``normalize_text(s)`` / ``text_quality-style`` helpers are plain
-      expressions, usable directly; the aggregate surface
-      (``collect_array``) maps to built-in ``collect_list`` wrapped in
-      ``coalesce(..., array())`` as documented on :func:`collect_array`.
+    """Register ``s2_token(lat, lon, level)`` — the S2 cell token Arrow
+    UDF (:func:`spark_ext_spark.functions.s2.s2_token`, per-row level)
+    — for pure-SQL users. The rest of this module is compositions of
+    built-ins that SQL spells directly, e.g. ``collect_array`` is
+    ``coalesce(collect_list(x), array())`` (see :func:`collect_array`).
     """
-    import pandas as pd
-
-    from spark_ext_spark.functions.s2 import cell_tokens
-
-    # no type hints: PEP-563 string annotations (module-level future
-    # import) are unresolvable by pyspark's hint inspection
-    @F.pandas_udf("string")
-    def s2_token(lat, lon, level):
-        # level may be a per-row COLUMN, not just a literal: compute
-        # each distinct level over its own row subset (one vectorized
-        # pass per distinct level; a literal is one pass as before)
-        import numpy as np
-        out = pd.Series([None] * len(lat), dtype=object)
-        la = lat.to_numpy(dtype=np.float64, na_value=np.nan)
-        lo = lon.to_numpy(dtype=np.float64, na_value=np.nan)
-        for lvl in pd.unique(level.dropna()):
-            m = (level == lvl).to_numpy()
-            out[m] = cell_tokens(la[m], lo[m], int(lvl))
-        return out
+    from spark_ext_spark.functions.s2 import s2_token
 
     spark.udf.register("s2_token", s2_token)
 

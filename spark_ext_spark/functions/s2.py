@@ -10,11 +10,14 @@ feature/S2CellTransformer.scala:58-61):
   (i,j) → Hilbert-curve position → 64-bit cell id → parent(level) →
   hex token (trailing zeros stripped).
 
-Two surfaces:
+Three surfaces:
 - scalar ``cell_token(lat, lon, level)`` — reference/tests;
 - vectorized ``cell_tokens(lat_arr, lon_arr, level)`` over numpy
-  arrays — the Arrow-batched hot path for pandas_udf (the 8-round
-  Hilbert loop runs as whole-array ops, ~10⁷ rows/s/core).
+  arrays (the 8-round Hilbert loop runs as whole-array ops, ~10⁷
+  rows/s/core);
+- ``s2_token(lat, lon, level)``, the one Arrow UDF over
+  ``cell_tokens`` — shared by ``S2CellTransformer`` and the SQL
+  function ``register_sql_functions`` registers.
 """
 
 from __future__ import annotations
@@ -22,6 +25,9 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pandas as pd
+from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 LOOKUP_BITS = 4
 SWAP_MASK = 1
@@ -202,3 +208,19 @@ def cell_tokens(lat: np.ndarray, lon: np.ndarray,
     mask64 = np.uint64(0xFFFFFFFFFFFFFFFF)
     parents = (ids & ((~(new_lsb - np.uint64(1))) & mask64)) | new_lsb
     return [None if b else token(int(p)) for p, b in zip(parents, bad)]
+
+
+# no type hints: PEP-563 string annotations (module-level future
+# import) are unresolvable by pyspark's hint inspection
+@F.pandas_udf(StringType())
+def s2_token(lat, lon, level):
+    """Arrow UDF: S2 cell token per row; ``level`` may be a per-row
+    column (one vectorized pass per distinct level, so a literal level
+    is one pass). Null/NaN coordinates or a null level → NULL."""
+    out = pd.Series([None] * len(lat), dtype=object)
+    la = lat.to_numpy(dtype=np.float64, na_value=np.nan)
+    lo = lon.to_numpy(dtype=np.float64, na_value=np.nan)
+    for lvl in pd.unique(level.dropna()):
+        m = (level == lvl).to_numpy()
+        out[m] = cell_tokens(la[m], lo[m], int(lvl))
+    return out

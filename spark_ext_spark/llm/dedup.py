@@ -125,7 +125,6 @@ def word_shingles(df: DataFrame, id_col: str, text_col: str,
 def blocked_pair_counts(df: DataFrame, id_col: str, text_col: str,
                         n: int = 3,
                         max_shingle_df: int | None = 1000,
-                        hash_shingles: bool = True,
                         unique_ids: bool = True) -> DataFrame:
     """The shared candidate core of n-gram set-overlap dedup:
     (doc_a, doc_b, shared, n_a, n_b) for every document pair sharing
@@ -140,77 +139,36 @@ def blocked_pair_counts(df: DataFrame, id_col: str, text_col: str,
     shingle that common carries no dedup signal but would create a
     quadratic bucket at scale).
 
-    ``hash_shingles`` replaces each shingle string with its xxhash64
-    before the distinct/cap/self-join, shrinking the shuffle key from a
-    ~20-40 byte string to 8 bytes; counts are unchanged barring a
-    64-bit collision (P ≈ d²/2⁶⁵ — negligible below ~10¹² distinct
-    shingles).
+    Each shingle string is replaced by its xxhash64 before the
+    distinct/cap/self-join, shrinking the shuffle key from a ~20-40
+    byte string to 8 bytes; counts are unchanged barring a 64-bit
+    collision (P ≈ d²/2⁶⁵ — negligible below ~10¹² distinct shingles).
 
     ``unique_ids`` (default True — one row per document id) lets the
     shingle table skip its dedup shuffle; set False if ids can repeat.
     """
     from pyspark.sql.window import Window
 
-    sh = word_shingles(df, id_col, text_col, n, hashed=hash_shingles,
+    sh = word_shingles(df, id_col, text_col, n, hashed=True,
                        unique_ids=unique_ids)
-    # NULL-id docs are dropped BEFORE the df cap (r12). Two effects,
-    # stated honestly (r13, ADVICE note): (1) their shingle rows never
-    # ride the self-join (pure win — the old plan only dropped them at
-    # the sizes equi-join, after fanning out); (2) they no longer count
-    # toward shingle document frequency, so a shingle whose df
-    # straddles max_shingle_df only via NULL-id docs now SURVIVES the
-    # cap. A NULL id names no retrievable document — counting it as
-    # dedup evidence was an artifact of the old plan, and no declared
-    # corpus carries NULL ids (oracle-moot) — but it IS a semantics
-    # choice, pinned in tests/test_llm_dedup.py
-    # (test_null_id_docs_do_not_count_toward_df_cap), not an
-    # equivalence.
+    # NULL-id docs name no retrievable document: dropped BEFORE the df
+    # cap, so they never ride the self-join nor count toward shingle df
+    # (a semantics choice, pinned by
+    # test_null_id_docs_do_not_count_toward_df_cap; OPTIMIZATION_r13.md)
     sh = sh.filter(F.col("doc").isNotNull())
-    # df cap as a map-side-combined groupBy → tiny HOT table →
-    # broadcast LEFT ANTI join (r13, VERDICT item 3 / guide §2.5).
-    # The r12 form — count().over(Window.partitionBy(shingle)) — put
-    # every row of a hot shingle into ONE window task: AQE can split a
-    # skewed JOIN partition but never a window partition, so the
-    # stop-shingles the cap exists to drop (df up to billions at
-    # 100 TB) were exactly the rows serializing through a single task.
-    # The groupBy counts combine map-side (a hot key contributes one
-    # partial row per map partition), the hot list is tiny by
-    # construction (only shingles with df > cap), and hot rows vanish
-    # BEFORE the self-join. This also removes the E-sized
-    # Exchange(shingle)+sort the cap window needed — the sizes window
-    # below reuses nothing from it (the doc exchange intervenes) — at
-    # the cost of one extra map-only pass over the shingle build for
-    # the counts aggregate. Engineered-skew + real-corpus A/B
-    # (/tmp/skew_shingle_ab.py, r13): sf0.1 documents median
-    # 1.94 → 1.49 s (0.77×); engineered 400k-doc hot-shingle corpus
-    # 1.07× (the extra pass, before the hot key is big enough to
-    # straggle locally); pair table byte-identical on BOTH corpora
-    # (exceptAll in both directions = 0 rows).
-    # Broadcast sizing: by pigeonhole the hot list has ≤ E/cap entries
-    # (E = shingle rows), and in any Zipf-shaped corpus the shingles
-    # past a 500-1000 df cap are the stop-phrase head — O(10⁵-10⁶)
-    # keys of 8 bytes even at web scale, far under broadcast limits.
-    # A corpus pathological enough to overflow it (10⁸+ distinct
-    # stop-shingles) should RAISE the cap rather than drop this hint:
-    # an unhinted anti-join would re-shuffle sh by shingle, which is
-    # the window form's cost without its simplicity.
+    # df cap as map-side-combined counts → tiny broadcast hot list →
+    # LEFT ANTI join: AQE can split a skewed join but never a window
+    # partition (measured, sizing argument: OPTIMIZATION_r13.md)
     if max_shingle_df is not None:
         hot = (sh.groupBy("shingle").count()
                .filter(F.col("count") > max_shingle_df)
                .select("shingle"))
         sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
 
-    # Attach each doc's shingle count to its SHINGLE rows and let the
-    # counts ride the self-join into the pair aggregate, instead of
-    # joining a sizes table onto the aggregated PAIR table twice (r12
-    # optimization round). The pair table is the larger relation
-    # whenever shingles repeat at all (Σ df² candidate pairs vs E
-    # shingle rows — 1.13 M vs 260 k at sf0.1), and at 100 TB the
-    # per-doc sizes table is far past broadcast range, so the old plan
-    # re-shuffled the pair table twice; now the counts cost 8 bytes
-    # per row on shuffles that already exist. min() in the aggregate
-    # is exact: n_a/n_b are constant within a (doc_a, doc_b) group by
-    # construction.
+    # each doc's shingle count rides its shingle rows through the
+    # self-join instead of joining a sizes table onto the larger pair
+    # table twice (OPTIMIZATION_r12.md); min() is exact — n_a/n_b are
+    # constant within a (doc_a, doc_b) group
     shn = sh.withColumn("n_shingles", F.count(F.lit(1))
                         .over(Window.partitionBy("doc")))
     a = shn.select(F.col("doc").alias("doc_a"), "shingle",
@@ -228,13 +186,12 @@ def blocked_pair_counts(df: DataFrame, id_col: str, text_col: str,
 def jaccard_similar_pairs(df: DataFrame, id_col: str, text_col: str,
                           n: int = 3, threshold: float = 0.5,
                           max_shingle_df: int | None = 1000,
-                          hash_shingles: bool = True,
                           unique_ids: bool = True) -> DataFrame:
     """Near-duplicate pairs by exact n-gram Jaccard ≥ threshold, over
     :func:`blocked_pair_counts`' capped shingle-equi-join candidates
     (never all-pairs)."""
     pc = blocked_pair_counts(df, id_col, text_col, n, max_shingle_df,
-                             hash_shingles, unique_ids)
+                             unique_ids)
     return (pc.withColumn("jaccard",
                           F.col("shared")
                           / (F.col("n_a") + F.col("n_b")
@@ -247,7 +204,6 @@ def jaccard_similar_pairs(df: DataFrame, id_col: str, text_col: str,
 def containment_pairs(df: DataFrame, id_col: str, text_col: str,
                       n: int = 3, threshold: float = 0.5,
                       max_shingle_df: int | None = 1000,
-                      hash_shingles: bool = True,
                       unique_ids: bool = True) -> DataFrame:
     """Subset/quote/boilerplate detection: pairs whose n-gram
     CONTAINMENT ``shared / min(|A|, |B|)`` ≥ threshold. Catches the
@@ -256,7 +212,7 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str,
     the long doc) but containment ≈ 1. Same blocked candidate core as
     :func:`jaccard_similar_pairs` (:func:`blocked_pair_counts`)."""
     pc = blocked_pair_counts(df, id_col, text_col, n, max_shingle_df,
-                             hash_shingles, unique_ids)
+                             unique_ids)
     return (pc.withColumn("containment",
                           F.col("shared") / F.least("n_a", "n_b"))
             .filter(F.col("containment") >= threshold)
@@ -313,10 +269,9 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
                       n: int = 3, num_hashes: int = 64, bands: int = 16,
-                      threshold: float = 0.5, seed: int = 42,
-                      verify: bool = True) -> DataFrame:
-    """Candidate near-dup pairs via banded MinHash-LSH; optionally
-    verified with the signature-estimated Jaccard ≥ threshold.
+                      threshold: float = 0.5, seed: int = 42) -> DataFrame:
+    """Near-dup pairs via banded MinHash-LSH candidates, verified with
+    the signature-estimated Jaccard ≥ threshold.
 
     bands=16 × rows=4 at num_hashes=64 targets the classic S-curve
     crossover around jaccard ≈ (1/16)^(1/4) ≈ 0.5. Everything after
@@ -342,8 +297,6 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     cand = (a.join(b, ["band", "band_hash"])
             .filter(F.col("doc_a") < F.col("doc_b"))
             .select("doc_a", "doc_b").distinct())
-    if not verify:
-        return cand
 
     sa = sigs.select(F.col("doc").alias("doc_a"),
                      F.col("signature").alias("sig_a"))

@@ -9,7 +9,7 @@ hash splits and sequence packing.
 - ``pack_sequences``: assign documents to fixed-token-budget training
   sequences by exclusive running token count over a total order (the
   streaming-concatenation packing used to build LM batches). Uses the
-  distributed two-phase prefix sums (operators/prefix.py) so the global
+  range-partitioned running sums (operators/prefix.py) so the global
   ordering never funnels through one task at scale; each sequence holds
   consecutive docs with ≈budget tokens (overflow ≤ one document).
 """
@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spark_ext_spark.llm.text import tokens
-from spark_ext_spark.operators.prefix import partitioned_cumulative_sums
+from spark_ext_spark.operators.prefix import running_sums
 
 __all__ = ["hash60", "hash_unit_interval", "hash_split", "pack_sequences",
            "score_top_fraction",
@@ -78,17 +78,15 @@ def pack_sequences(df: DataFrame, id_col: str, text_col: str,
     into sequences of ≈``budget`` tokens; seq_id = exclusive running
     token count DIV budget. A document straddling a boundary belongs to
     the sequence where it starts (overflow ≤ its own length — the
-    standard streaming-packing contract). Distributed: ordering via
-    range partitioning + two-phase prefix sums, never a single-task
-    window. ``persisted_out`` receives the prefix path's persisted
-    intermediate for explicit release once the packing is
-    materialized."""
+    standard streaming-packing contract). Distributed: running_sums'
+    range-partitioned arm, never a single-task window.
+    ``persisted_out`` receives that arm's persisted intermediate for
+    explicit release once the packing is materialized."""
     toks = df.select(F.col(id_col).alias("doc"),
                      F.size(tokens(text_col)).alias("n_tokens"))
-    cum = partitioned_cumulative_sums(
-        toks, [F.asc("doc")], {"cum_excl": "n_tokens"},
-        num_partitions=num_partitions, inclusive=False,
-        persisted_out=persisted_out)
+    cum = running_sums(
+        toks, [F.asc("doc")], {"cum_excl": "n_tokens"}, inclusive=False,
+        num_partitions=num_partitions, persisted_out=persisted_out)
     return cum.select(
         F.col("doc").alias(id_col), "n_tokens",
         F.floor(F.col("cum_excl") / F.lit(budget)).alias("seq_id"))
@@ -194,7 +192,7 @@ def length_bucketed_batches(df: DataFrame, id_col: str, text_col: str,
     count is bounded by max_len / bucket_tokens, and rows per bucket
     by the corpus — partition-parallel across buckets; for a corpus
     with billions of docs per bucket swap the window for the
-    distributed prefix sums as pack_sequences does). Deterministic:
+    range-partitioned running sums as pack_sequences does). Deterministic:
     ordering is (doc id), a total order."""
     toks = df.select(F.col(id_col).alias("doc"),
                      F.size(tokens(text_col)).alias("n_tokens"))

@@ -15,8 +15,7 @@ from spark_ext_spark.operators.gather_encoder import (  # noqa: F401
     GatherEncoder, GatherEncoderModel)
 from spark_ext_spark.operators.indexer import (  # noqa: F401
     StringToShortIndexer, StringToShortIndexerModel)
-from spark_ext_spark.operators.prefix import (  # noqa: F401
-    partitioned_cumulative_sums)
+from spark_ext_spark.operators.prefix import running_sums  # noqa: F401
 from spark_ext_spark.operators.range_join import range_join  # noqa: F401
 from spark_ext_spark.operators.s2cell import S2CellTransformer  # noqa: F401
 from spark_ext_spark.operators.validation import (  # noqa: F401

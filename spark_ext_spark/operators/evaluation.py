@@ -18,26 +18,24 @@ Pipeline (reference :156-221, re-expressed declaratively):
    score with summed counts (reference :167-196; we group over the
    GLOBAL order, which equals the reference's per-partition grouping at
    its tested 1-partition layout and is deterministic at any layout);
-3. cumulative pos/neg over score-descending order. Below
-   ``prefix_threshold`` distinct scores the running sums use one
-   global window over the COMPACTED table (cardinality = distinct
-   scores, further bounded by numBins) — one task, fine for discrete
-   scores. Above it — continuous model scores, where distinct ≈ N and
-   a global window is a single-task cliff — they switch to
-   ``operators/prefix.py:partitioned_cumulative_sums``: range-partition
-   on the score, cumsum within partitions, add per-partition offsets
-   from a bounded (#partitions-row) collect. That is EXACTLY the
-   reference's own technique (BinaryModelMetrics.scala:198-216:
-   per-partition totals → driver scanLeft → offset add). The numBins
-   down-sampling's global row_number goes through the same chooser;
+3. cumulative pos/neg over score-descending order with
+   ``operators/prefix.py:running_sums``. Up to ``PREFIX_MIN_SCORES``
+   distinct scores it plans one global window over the COMPACTED
+   table (cardinality = distinct scores, further bounded by numBins)
+   — one task, fine for discrete scores. Above it — continuous model
+   scores, where distinct ≈ N and a global window is a single-task
+   cliff — it takes the range-partitioned arm: cumsum within range
+   partitions, add per-partition offsets from a bounded
+   (#partitions-row) collect. That is EXACTLY the reference's own
+   technique (BinaryModelMetrics.scala:198-216: per-partition totals →
+   driver scanLeft → offset add). The numBins down-sampling's global
+   row number goes through the same switch;
 4. per-threshold confusion matrix columns: TP=cumPos, FP=cumNeg,
-   FN=totPos-cumPos, TN=totNeg-cumNeg. On the window path the totals
-   are sums over an unbounded frame of the SAME score-descending
-   window, so Catalyst evaluates them in the Window operator that
-   yields TP/FP (the reference likewise builds cumulative counts and
-   totals in one pass, :198-216). On the prefix-sum path they are
-   joined in via a broadcast 1-row aggregate. Neither collects to the
-   driver; the table stays lazy.
+   FN=totPos-cumPos, TN=totNeg-cumNeg. The totals come from the same
+   ``running_sums`` call: an unbounded frame of the SAME window on the
+   window arm (one Window operator, as the reference builds cumulative
+   counts and totals in one pass, :198-216), plan literals off the
+   offsets collect on the range arm. The table stays lazy.
 
 Metric definitions (Spark 1.5 binary package + reference computers):
 precision = TP/(TP+FP) (1.0 when empty), recall/TPR = TP/P (0.0 when
@@ -51,7 +49,14 @@ from functools import cached_property
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from spark_ext_spark.operators.prefix import running_sums
+
+
+# Above this many distinct scores the running sums take running_sums'
+# range-partitioned arm instead of one global window (crossover
+# measured in SCALE.md, "Global prefix-sum crossover").
+PREFIX_MIN_SCORES = 1_000_000
 
 
 class BinaryModelMetrics:
@@ -62,68 +67,47 @@ class BinaryModelMetrics:
     """
 
     def __init__(self, score_and_labels: DataFrame, num_bins: int = 0,
-                 score_col: str = "score", label_col: str = "label",
-                 prefix_threshold: int | None = 1_000_000):
+                 score_col: str = "score", label_col: str = "label"):
         if num_bins < 0:
             raise ValueError("numBins must be nonnegative")
         self.df = score_and_labels.select(
             F.col(score_col).cast("double").alias("score"),
             F.col(label_col).cast("double").alias("label"))
         self.num_bins = num_bins
-        # Above this many distinct scores, running sums use the
-        # distributed prefix-sum operator instead of one global window.
-        # None = always use the window (skips the sizing count() —
-        # only safe when scores are known-discrete).
-        self.prefix_threshold = prefix_threshold
         self._n_cum: int | None = None
         self._persisted: DataFrame | None = None
-        # range-partitioned intermediates persisted by the prefix-sum
-        # path — released by unpersist() alongside the confusion cache
+        # range-partitioned intermediates persisted by running_sums —
+        # released by unpersist() alongside the confusion cache
         self._prefix_persists: list[DataFrame] = []
 
     # -- core cumulative table --------------------------------------------
 
-    def _with_running(self, df: DataFrame, values: dict) -> DataFrame:
-        """Append exact running sums over score-descending order,
-        choosing the scale-appropriate plan: global window when the
-        table is known-small, range-partitioned prefix sums
-        (operators/prefix.py — the reference's scanLeft-offsets
-        technique, BinaryModelMetrics.scala:198-216) when distinct
-        scores exceed ``prefix_threshold``. Both are exact (integer
-        counts sum associatively), so the choice never changes
-        results — asserted on 1e6 distinct scores in
-        tests/test_evaluation.py."""
-        if self._prefix_path():
-            from spark_ext_spark.operators.prefix import (
-                partitioned_cumulative_sums)
-            return partitioned_cumulative_sums(
-                df, [F.desc("score")], values,
-                persisted_out=self._prefix_persists)
-        w = (Window.orderBy(F.desc("score"))
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        out = df
-        for name, c in values.items():
-            out = out.withColumn(name, F.sum(c).over(w))
-        return out
-
-    def _prefix_path(self) -> bool:
-        return (self.prefix_threshold is not None and self._n_cum is not None
-                and self._n_cum > self.prefix_threshold)
+    def _running(self, df: DataFrame, values: dict,
+                 totals: dict | None = None) -> DataFrame:
+        """Exact running sums over score-descending order: the window
+        arm up to PREFIX_MIN_SCORES distinct scores, the
+        range-partitioned arm past it. Both are exact (integer counts
+        sum associatively), so the switch never changes results —
+        asserted on 1e6 distinct scores in tests/test_evaluation.py."""
+        n = None
+        if self._n_cum > PREFIX_MIN_SCORES:
+            n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        return running_sums(df, [F.desc("score")], values, totals=totals,
+                            num_partitions=n,
+                            persisted_out=self._prefix_persists)
 
     def _sized(self, counts: DataFrame) -> DataFrame:
         """Persist the compacted table and take its distinct-score
-        count — shared by the numBins chunk size and the cumsum
-        strategy choice. Runs at most once. With num_bins == 0 (the
+        count — shared by the numBins chunk size and the running-sum
+        arm choice. Runs once per object. With num_bins == 0 (the
         default) thresholds() needs no running sums and therefore
         skips the count job entirely; with num_bins > 0 the binned
         re-group needs the count, so thresholds() does trigger it
         via _counts."""
-        if self._n_cum is None:
-            counts = counts.persist()
-            self._persisted = counts
-            self._n_cum = counts.count()
-            return counts
-        return self._persisted if self._persisted is not None else counts
+        counts = counts.persist()
+        self._persisted = counts
+        self._n_cum = counts.count()
+        return counts
 
     @cached_property
     def _counts(self) -> DataFrame:
@@ -135,7 +119,7 @@ class BinaryModelMetrics:
             counts = self._sized(counts)
             grouping = self._n_cum // self.num_bins
             if grouping >= 2:
-                counts = (self._with_running(counts, {"__rn": F.lit(1)})
+                counts = (self._running(counts, {"__rn": F.lit(1)})
                           .withColumn("__grp",
                                       F.floor((F.col("__rn") - 1)
                                               / grouping))
@@ -145,7 +129,7 @@ class BinaryModelMetrics:
                                F.sum("neg").alias("neg"))
                           .drop("__grp"))
                 # after down-sampling the table is ≤ numBins+1 rows —
-                # the window path is the right cumsum plan from here on
+                # the window arm is the right plan from here on
                 self._n_cum = self._n_cum // grouping + 1
         return counts
 
@@ -156,23 +140,10 @@ class BinaryModelMetrics:
         (the AUC aggregates reconstruct the previous curve point from
         the increments, so they ride along)."""
         counts = self._counts
-        if self.prefix_threshold is not None and self._n_cum is None:
+        if self._n_cum is None:  # num_bins == 0: not sized by _counts
             counts = self._sized(counts)
-        cum = self._with_running(counts, {"tp": F.col("pos"),
-                                          "fp": F.col("neg")})
-        totals = {"tot_pos": F.sum("pos"), "tot_neg": F.sum("neg")}
-        if self._prefix_path():
-            from spark_ext_spark.functions import attach_scalar_agg
-            cum = attach_scalar_agg(cum, totals, source=counts)
-        else:
-            # whole-table frame over the running sums' own ordering:
-            # same window spec, so the same Window operator — no second
-            # aggregate, exchange or broadcast for the totals
-            w_all = (Window.orderBy(F.desc("score"))
-                     .rowsBetween(Window.unboundedPreceding,
-                                  Window.unboundedFollowing))
-            cum = cum.select("*", *[agg.over(w_all).alias(name)
-                                    for name, agg in totals.items()])
+        cum = self._running(counts, {"tp": "pos", "fp": "neg"},
+                            totals={"tot_pos": "pos", "tot_neg": "neg"})
         # Cached like the reference persists cumulativeCounts
         # (BinaryModelMetrics.scala:216): every curve/AUC reuses it.
         return (cum

@@ -57,30 +57,18 @@ class Gather(Transformer, DefaultParamsReadable, DefaultParamsWritable):
         "output (collection order is otherwise unspecified, as in the "
         "reference aggregate)",
         typeConverter=TypeConverters.toBoolean)
-    singleShuffle = Param(
-        Params._dummy(), "singleShuffle",
-        "pre-repartition by the primary key so BOTH aggregation levels "
-        "reuse one exchange (hash partitioning on pk alone satisfies "
-        "the (pk, key) clustering too). The one shuffle then carries "
-        "RAW rows with no map-side combine — faster when rows per "
-        "(pk, key) pair is small (measured 1.5x at sf0.1, ~6 rows/"
-        "pair); the default two-shuffle plan wins when duplicates are "
-        "heavy, since its first shuffle carries only distinct pairs",
-        typeConverter=TypeConverters.toBoolean)
 
     @keyword_only
     def __init__(self, *, primaryKeyCols=None, keyCol=None, valueCol=None,
-                 valueAgg="sum", outputCol=None, sortKeys=False,
-                 singleShuffle=False):
+                 valueAgg="sum", outputCol=None, sortKeys=False):
         super().__init__()
-        self._setDefault(valueAgg="sum", sortKeys=False, singleShuffle=False)
+        self._setDefault(valueAgg="sum", sortKeys=False)
         kwargs = self._input_kwargs
         self._set(**{k: v for k, v in kwargs.items() if v is not None})
 
     @keyword_only
     def setParams(self, *, primaryKeyCols=None, keyCol=None, valueCol=None,
-                  valueAgg=None, outputCol=None, sortKeys=None,
-                  singleShuffle=None):
+                  valueAgg=None, outputCol=None, sortKeys=None):
         kwargs = self._input_kwargs
         return self._set(**{k: v for k, v in kwargs.items() if v is not None})
 
@@ -110,12 +98,8 @@ class Gather(Transformer, DefaultParamsReadable, DefaultParamsWritable):
             raise ValueError("primaryKeyCols must be non-empty")
 
         agg_expr = (F.sum(value) if agg == "sum" else F.count(value))
-        if self.getOrDefault(self.singleShuffle):
-            dataset = dataset.repartition(*pk)
         # Level 1: (pk, key) aggregation — map-side partial combine cuts
-        # the shuffle volume to distinct (pk, key) pairs (two-shuffle
-        # default); under singleShuffle the pk partitioning satisfies
-        # both levels' clustering and no further exchange is planned.
+        # the shuffle volume to distinct (pk, key) pairs.
         grouped = (dataset
                    .groupBy(*pk, key)
                    .agg(agg_expr.cast("double").alias("__gather_value")))

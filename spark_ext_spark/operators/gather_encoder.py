@@ -25,13 +25,13 @@ Scale design (100 TB): the fit is fully distributed —
 ``explode → groupBy(key).count()`` with map-side partial aggregation,
 then a cumsum over the *compacted distinct-key table* (whose
 cardinality is the dictionary size, ≤ ``maxKeys``), and one bounded
-collect of the final dictionary. The cumsum defaults to a global
-window (single task — fine to ~1e6 distinct keys); set
-``fitPartitions=N`` to switch to distributed two-phase prefix sums
-(operators/prefix.py) when the key table itself is huge. The transform broadcasts the
-dictionary explicitly (``sc.broadcast``) instead of closure-capturing
-it per task (the reference ships keys in the UDF closure,
-GatherEncoder.scala:304,326-370).
+collect of the final dictionary. The cumsum is
+``operators/prefix.py:running_sums``: one global window by default
+(single task — fine to ~1e6 distinct keys), its range-partitioned arm
+over ``fitPartitions=N`` ranges when the key table itself is huge.
+The transform broadcasts the dictionary explicitly (``sc.broadcast``)
+instead of closure-capturing it per task (the reference ships keys in
+the UDF closure, GatherEncoder.scala:304,326-370).
 """
 
 from __future__ import annotations
@@ -44,9 +44,8 @@ from pyspark.ml.util import DefaultParamsReadable, DefaultParamsWritable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructType
-from pyspark.sql.window import Window
 
-from spark_ext_spark.operators.prefix import partitioned_cumulative_sums
+from spark_ext_spark.operators.prefix import running_sums
 
 TRANSFORMATIONS = ("top", "index")
 
@@ -89,7 +88,7 @@ class _GatherEncoderParams(Params):
     fitPartitions = Param(Params._dummy(), "fitPartitions",
                           "0 = single-partition window over the compacted "
                           "key table (cheapest below ~1e6 keys); N>1 = "
-                          "distributed two-phase prefix sums over N range "
+                          "range-partitioned running sums over N "
                           "partitions (operators/prefix.py) for huge "
                           "dictionaries",
                           typeConverter=TypeConverters.toInt)
@@ -159,8 +158,8 @@ class GatherEncoder(Estimator, _GatherEncoderParams,
                       persisted_out: list | None = None) -> DataFrame:
         """Dictionary as a DataFrame (key, count, slot) — stays
         distributed; ``fit`` does the final bounded collect.
-        ``persisted_out`` receives any intermediate the distributed
-        (fitPartitions > 1) prefix-sum path persists, for release
+        ``persisted_out`` receives any intermediate the
+        range-partitioned arm (fitPartitions > 1) persists, for release
         after the dictionary is materialized (``_fit`` does this)."""
         transformation = self.getOrDefault(self.transformation)
         if transformation not in TRANSFORMATIONS:
@@ -169,90 +168,44 @@ class GatherEncoder(Estimator, _GatherEncoderParams,
         exclude = self.getOrDefault(self.excludeKeys)
         counts = self.key_counts(dataset)
 
+        # One running_sums call per transformation: the window arm
+        # (fitPartitions=0) or the range-partitioned arm over
+        # fitPartitions ranges. Both threshold filters keep a prefix of
+        # the (count desc, key asc) order — counts are ≥ 1, so `cum`
+        # rises strictly and `count` falls — hence a slot numbered
+        # before the filter equals the post-filter numbering.
         order = [F.desc("count"), F.asc("key")]
         n_fit = self.getOrDefault(self.fitPartitions)
-        # Single-partition path: the exclusive running sum, the
-        # coverage/support total (a whole-table frame) and the slot all
-        # come from ONE window over (count desc, key asc) — one Window
-        # operator, no second aggregate of the counts table. Both
-        # threshold filters keep a prefix of that order (counts are
-        # ≥ 1, so `cum` rises strictly and `count` falls), hence a slot
-        # numbered before the filter equals the post-filter numbering.
-        w = Window.orderBy(*order)
-        w_excl = w.rowsBetween(Window.unboundedPreceding, -1)
-        w_all = w.rowsBetween(Window.unboundedPreceding,
-                              Window.unboundedFollowing)
-        total = F.sum("count").over(w_all)
+        run = dict(inclusive=False, totals={"__total": "count"},
+                   num_partitions=n_fit if n_fit > 1 else None,
+                   persisted_out=persisted_out)
 
         if transformation == "top":
             # Exclusion BEFORE the coverage total (GatherEncoder.scala:178-183).
             if exclude:
                 counts = counts.filter(~F.col("key").isin(list(exclude)))
             cover = self.getOrDefault(self.cover)
-            if n_fit > 1:
-                # distributed: exclusive coverage cumsum AND the slot
-                # index (exclusive count of preceding rows = rank-1)
-                # share one range shuffle. The coverage TOTAL rides the
-                # prefix operator's own offsets collect as a plan
-                # literal (r13) — a second aggregate of the counts
-                # table is never needed, since this path already syncs
-                # on the driver for the offsets. Counts are longs, so
-                # the total is exact.
-                tot = {"__total": "cum"}  # keyed by the values entry
-                # whose summed column is `count`
-                cs = partitioned_cumulative_sums(
-                    counts, order,
-                    {"cum": "count", "slot": F.lit(1)},
-                    num_partitions=n_fit, inclusive=False,
-                    persisted_out=persisted_out, grand_totals=tot)
-                threshold = F.lit(cover / 100.0) * F.lit(tot["__total"])
-                return (cs.filter(F.col("cum") < threshold)
-                        .select("key", "count",
-                                F.col("slot").cast("int").alias("slot")))
-            cum = F.coalesce(F.sum("count").over(w_excl), F.lit(0))
-            return (counts
-                    .select("key", "count", cum.alias("cum"),
-                            total.alias("__total"),
-                            (F.row_number().over(w) - 1).alias("slot"))
+            return (running_sums(counts, order,
+                                 {"cum": "count", "slot": F.lit(1)}, **run)
                     .filter(F.col("cum")
                             < F.lit(cover / 100.0) * F.col("__total"))
-                    .drop("cum", "__total"))
+                    .select("key", "count",
+                            F.col("slot").cast("int").alias("slot")))
 
         # Threshold over the UNFILTERED total; exclusion after
-        # (GatherEncoder.scala:200-220).
+        # (GatherEncoder.scala:200-220): excluded keys still count
+        # toward the total but take no slot — the slot is the running
+        # count of kept keys.
         support = self.getOrDefault(self.support)
-        if n_fit > 1:
-            # the distributed path attaches the total as a broadcast
-            # single-row aggregate and numbers slots after exclusion
-            from spark_ext_spark.functions import attach_scalar_agg
-            selected = (attach_scalar_agg(
-                            counts, {"__total": F.coalesce(F.sum("count"),
-                                                           F.lit(0))})
-                        .filter(F.col("count")
-                                >= F.lit(support / 100.0)
-                                * F.col("__total"))
-                        .drop("__total"))
-            if exclude:
-                selected = selected.filter(~F.col("key").isin(list(exclude)))
-            cs = partitioned_cumulative_sums(
-                selected, order, {"slot": F.lit(1)},
-                num_partitions=n_fit, inclusive=False,
-                persisted_out=persisted_out)
-            return cs.select("key", "count",
-                             F.col("slot").cast("int").alias("slot"))
-        # excluded keys still count toward the total but take no slot:
-        # the slot is the running count of kept keys, on the same window
         kept = (~F.col("key").isin(list(exclude)) if exclude
                 else F.lit(True))
-        w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        slot = (F.count_if(kept).over(w_run) - 1).cast("int")
-        return (counts
-                .select("key", "count", total.alias("__total"),
-                        kept.alias("__kept"), slot.alias("slot"))
+        return (running_sums(counts, order, {"slot": kept.cast("int")},
+                             **run)
                 .filter(F.col("count")
                         >= F.lit(support / 100.0) * F.col("__total"))
-                .filter("__kept")
-                .drop("__total", "__kept"))
+                .filter(kept)
+                .select("key", "count",
+                        F.col("slot").cast("int").alias("slot")))
 
     def _fit(self, dataset: DataFrame) -> "GatherEncoderModel":
         self._validate_schema(dataset.schema)
@@ -260,8 +213,8 @@ class GatherEncoder(Estimator, _GatherEncoderParams,
         held: list = []
         rows = (self.selected_keys(dataset, persisted_out=held)
                 .orderBy("slot").limit(max_keys + 1).collect())
-        # the dictionary is on the driver now — release the prefix
-        # path's range-partitioned intermediate immediately
+        # the dictionary is on the driver now — release the range
+        # arm's persisted intermediate immediately
         for fr in held:
             fr.unpersist()
         if len(rows) > max_keys:

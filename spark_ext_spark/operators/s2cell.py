@@ -8,21 +8,19 @@ latCol="lat", lonCol="lon", cellCol="cell", level=10 (validated
 [0,30]); output column must not already exist; lat/lon must be Double.
 
 The cell math lives in :mod:`spark_ext_spark.functions.s2` (pure
-numpy). The row path is an Arrow-batched pandas_udf over the
+numpy). The row path is its ``s2_token`` Arrow UDF over the
 vectorized implementation — no per-row Python in the hot loop.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark import keyword_only
 from pyspark.ml import Transformer
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
-from spark_ext_spark.functions.s2 import cell_tokens
+from spark_ext_spark.functions.s2 import s2_token
 
 
 class S2CellTransformer(Transformer):
@@ -57,10 +55,5 @@ class S2CellTransformer(Transformer):
         if cell in dataset.columns:
             raise ValueError(f"Output column {cell} already exists.")
 
-        @F.pandas_udf(StringType())
-        def s2_token(lat_s: pd.Series, lon_s: pd.Series) -> pd.Series:
-            return pd.Series(cell_tokens(lat_s.to_numpy(), lon_s.to_numpy(),
-                                         lvl))
-
         return dataset.select(
-            "*", s2_token(F.col(lat), F.col(lon)).alias(cell))
+            "*", s2_token(F.col(lat), F.col(lon), F.lit(lvl)).alias(cell))

@@ -9,6 +9,7 @@ import pytest
 from pyspark.ml.evaluation import BinaryClassificationEvaluator
 from pyspark.ml.feature import VectorAssembler  # noqa: F401 (ml import smoke)
 
+from spark_ext_spark.operators import evaluation as ev
 from spark_ext_spark.operators.evaluation import BinaryModelMetrics
 
 SCORE_AND_LABELS = [
@@ -104,19 +105,23 @@ def _confusion_digest(df):
         F.sum("tp").alias("stp"), F.sum("fp").alias("sfp")).first()
 
 
-def test_prefix_path_equals_window_on_1e6_distinct_scores(spark):
+def test_prefix_path_equals_window_on_1e6_distinct_scores(spark,
+                                                          monkeypatch):
     """VERDICT r4 #1 done-criterion: with ≥1e6 DISTINCT scores (the
     continuous-score case where a global window is a single-task
-    cliff), the distributed prefix-sum cumsum produces exactly the
-    window path's confusion table."""
+    cliff), the range-partitioned running sums produce exactly the
+    window arm's confusion table. Each arm is forced through the
+    PREFIX_MIN_SCORES constant."""
     from pyspark.sql import functions as F
     n = 1_000_000
     sl = spark.range(n).select(
         (F.col("id") * 1e-6).alias("score"),
         (F.pmod(F.col("id"), F.lit(7)) < 3).cast("double").alias("label"))
-    m_win = BinaryModelMetrics(sl, prefix_threshold=None)
-    m_pre = BinaryModelMetrics(sl, prefix_threshold=1000)
+    monkeypatch.setattr(ev, "PREFIX_MIN_SCORES", 1 << 60)
+    m_win = BinaryModelMetrics(sl)
     d_win = _confusion_digest(m_win.confusions)
+    monkeypatch.setattr(ev, "PREFIX_MIN_SCORES", 1000)
+    m_pre = BinaryModelMetrics(sl)
     d_pre = _confusion_digest(m_pre.confusions)
     assert d_pre == d_win
     assert d_pre["n"] == n
@@ -127,20 +132,22 @@ def test_prefix_path_equals_window_on_1e6_distinct_scores(spark):
     m_pre.unpersist()
 
 
-def test_prefix_path_binned_equals_window(spark):
+def test_prefix_path_binned_equals_window(spark, monkeypatch):
     """The numBins down-sampling row-number goes through the same
-    window/prefix chooser — binned curves must match exactly too."""
+    window/range switch — binned curves must match exactly too."""
     from pyspark.sql import functions as F
     sl = spark.range(50_000).select(
         (F.col("id") * 2e-5).alias("score"),
         (F.pmod(F.col("id") * 7919, F.lit(13)) < 5)
         .cast("double").alias("label"))
-    m_win = BinaryModelMetrics(sl, num_bins=25, prefix_threshold=None)
-    m_pre = BinaryModelMetrics(sl, num_bins=25, prefix_threshold=100)
-    assert _confusion_digest(m_pre.confusions) \
-        == _confusion_digest(m_win.confusions)
-    assert m_pre.area_under_roc() == pytest.approx(
-        m_win.area_under_roc(), abs=1e-12)
+    monkeypatch.setattr(ev, "PREFIX_MIN_SCORES", 1 << 60)
+    m_win = BinaryModelMetrics(sl, num_bins=25)
+    d_win = _confusion_digest(m_win.confusions)
+    auc_win = m_win.area_under_roc()
+    monkeypatch.setattr(ev, "PREFIX_MIN_SCORES", 100)
+    m_pre = BinaryModelMetrics(sl, num_bins=25)
+    assert _confusion_digest(m_pre.confusions) == d_win
+    assert m_pre.area_under_roc() == pytest.approx(auc_win, abs=1e-12)
     m_win.unpersist()
     m_pre.unpersist()
 
@@ -165,16 +172,17 @@ def test_empty_input_auc_is_half(spark):
     assert m.area_under_pr() == pytest.approx(0.0)
 
 
-def test_unpersist_releases_prefix_intermediates(spark):
-    """The prefix-sum path persists a range-partitioned intermediate
-    per _with_running call; unpersist() must release those too (they
-    used to leak one cached full-table copy per above-threshold
-    confusions build for the session lifetime)."""
+def test_unpersist_releases_prefix_intermediates(spark, monkeypatch):
+    """The range arm persists a range-partitioned intermediate per
+    running_sums call; unpersist() must release those too (they used
+    to leak one cached full-table copy per above-threshold confusions
+    build for the session lifetime)."""
     from pyspark.sql import functions as F
     sl2 = spark.range(5000).select(
         (F.col("id") * 1e-3).alias("score"),
         (F.pmod(F.col("id"), F.lit(3)) < 1).cast("double").alias("label"))
-    m = BinaryModelMetrics(sl2, prefix_threshold=10)
+    monkeypatch.setattr(ev, "PREFIX_MIN_SCORES", 10)
+    m = BinaryModelMetrics(sl2)
     m.confusions.count()
     held = list(m._prefix_persists)
     assert held, "prefix path did not register its persisted frame"
@@ -203,6 +211,26 @@ def test_evaluation_job_floor(spark, count_jobs):
     assert count_jobs(evaluate) <= 9
     m.unpersist()
     src.unpersist()
+
+
+def test_evaluation_auc_gains_jobs(spark, count_jobs):
+    """area_under_roc + gains().collect() on the 10 fixture rows, plain
+    and binned, is pinned at 8 Spark jobs: the sizing count, the
+    cached confusion table and the two actions — no side job for the
+    totals on the window arm."""
+    for num_bins in (0, 3):
+        src = spark.createDataFrame(SCORE_AND_LABELS,
+                                    "score double, label double").cache()
+        src.count()
+        m = BinaryModelMetrics(src, num_bins=num_bins)
+
+        def evaluate():
+            m.area_under_roc()
+            m.gains().collect()
+
+        assert count_jobs(evaluate) == 8, num_bins
+        m.unpersist()
+        src.unpersist()
 
 
 def test_curve_endpoints_scan_no_python_rows(spark):

@@ -68,24 +68,3 @@ def test_gather_bad_agg_raises(spark):
         raise AssertionError("expected ValueError")
     except ValueError:
         pass
-
-
-def test_single_shuffle_gather_matches_and_plans_one_exchange(spark):
-    from pyspark.sql import functions as F
-    rows = [(u, f"k{u % 3}", float(v))
-            for u in range(20) for v in range(u % 4 + 1)]
-    df = spark.createDataFrame(rows, "user long, site string, imp double") \
-        .repartition(6)
-    base = Gather(primaryKeyCols=["user"], keyCol="site", valueCol="imp",
-                  outputCol="g", sortKeys=True)
-    single = Gather(primaryKeyCols=["user"], keyCol="site", valueCol="imp",
-                    outputCol="g", sortKeys=True, singleShuffle=True)
-    a = {r["user"]: [(s["site"], s["imp"]) for s in r["g"]]
-         for r in base.transform(df).collect()}
-    b = {r["user"]: [(s["site"], s["imp"]) for s in r["g"]]
-         for r in single.transform(df).collect()}
-    assert a == b
-    plan = single.transform(df)._jdf.queryExecution().executedPlan().toString()
-    # the repartition exchange is the ONLY one (counted once per node
-    # in toString); the two aggregations reuse its partitioning
-    assert plan.count("Exchange") == 1

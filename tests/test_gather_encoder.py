@@ -117,6 +117,21 @@ def test_fit_job_floor(cover_df, count_jobs):
         assert count_jobs(lambda: _encoder(**kw).fit(cover_df)) <= 3, kw
 
 
+def test_fit_jobs_pinned(cover_df, count_jobs):
+    """One running_sums call per transformation: the window-arm fit is
+    pinned at exactly 3 Spark jobs in both ``top`` and ``index`` mode,
+    and the range arm (fitPartitions=4) at 9 — its totals ride the
+    offsets collect, so ``index`` pays no extra total aggregate."""
+    cover_df.count()
+    for kw, jobs in (({"transformation": "top", "cover": 80.0}, 3),
+                     ({"transformation": "index", "support": 3.1}, 3),
+                     ({"transformation": "top", "cover": 80.0,
+                       "fitPartitions": 4}, 9),
+                     ({"transformation": "index", "support": 3.1,
+                       "fitPartitions": 4}, 9)):
+        assert count_jobs(lambda: _encoder(**kw).fit(cover_df)) == jobs, kw
+
+
 # --- model transform — GatherEncoderModelSpec.scala ----------------------
 
 MODEL_SCHEMA = StructType([

@@ -128,13 +128,13 @@ def test_rows_only_set_is_pinned():
         f"stale entries: {KNOWN_ROWS_ONLY - missing}")
 
 
-def test_curve_prefix_path_matches_oracle(spark, duck):
-    """The driver's curve queries take the window path at their
-    cardinality; force the distributed prefix-sum strategy
-    (prefix_threshold=1) on the same inputs and hash-compare against
-    the SAME DuckDB oracles — the scale path is oracle-exact, not just
-    window-equal."""
+def test_curve_prefix_path_matches_oracle(spark, duck, monkeypatch):
+    """The driver's curve queries take the window arm at their
+    cardinality; force the range-partitioned arm (PREFIX_MIN_SCORES=1)
+    on the same inputs and hash-compare against the SAME DuckDB
+    oracles — the scale path is oracle-exact, not just window-equal."""
     from pyspark.sql import functions as F
+    from spark_ext_spark.operators import evaluation
     from spark_ext_spark.operators.evaluation import BinaryModelMetrics
     from spark_ext_spark.plans import evaluation_queries as eq
     from spark_ext_spark.plans.relational import load
@@ -143,7 +143,8 @@ def test_curve_prefix_path_matches_oracle(spark, duck):
         F.col("value").alias("score"),
         F.when(F.col("event_type") == "purchase", 1.0).otherwise(0.0)
          .alias("label"))
-    m = BinaryModelMetrics(sl, prefix_threshold=1)
+    monkeypatch.setattr(evaluation, "PREFIX_MIN_SCORES", 1)
+    m = BinaryModelMetrics(sl)
     gains = m.gains().select(F.round("reach", 6).alias("reach"),
                              F.round("recall", 6).alias("recall"))
     compare_to_oracle(gains, duck, eq.GAINS_CURVE_SQL)
@@ -153,7 +154,7 @@ def test_curve_prefix_path_matches_oracle(spark, duck):
     compare_to_oracle(prec, duck, eq.PRECISION_BY_THRESHOLD_SQL)
     m.unpersist()
 
-    mb = BinaryModelMetrics(sl, num_bins=10, prefix_threshold=1)
+    mb = BinaryModelMetrics(sl, num_bins=10)
     roc = mb.roc().select(F.round("fpr", 6).alias("fpr"),
                           F.round("tpr", 6).alias("tpr"))
     compare_to_oracle(roc, duck, eq.ROC_CURVE_BINNED_SQL)

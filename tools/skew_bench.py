@@ -123,34 +123,28 @@ def main() -> None:
                                 persisted_out=held, **kw)),
         runs=2, after=lambda: release(held))
 
-    # 5. global-ordering cumulative sums: one global window (every row
-    # through ONE task) vs operators/prefix.py's range-partitioned
-    # prefix sums, at the distinct-score cardinalities around
-    # BinaryModelMetrics' prefix_threshold default (1e6). The curve
-    # operators switch paths on this number; measure the crossover the
-    # same way the as-of one was measured instead of asserting it.
-    from pyspark.sql.window import Window as W2
-
-    from spark_ext_spark.operators.prefix import partitioned_cumulative_sums
+    # 5. global-ordering cumulative sums: the two arms of
+    # operators/prefix.py:running_sums — one global window (every row
+    # through ONE task) vs range-partitioned — at the distinct-score
+    # cardinalities around BinaryModelMetrics' PREFIX_MIN_SCORES (1e6),
+    # where the curve operators switch arms.
+    from spark_ext_spark.operators.prefix import running_sums
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     for rows in (int(float(x)) for x in
                  os.environ.get("PREFIX_ROWS", "1e6,1e7").split(",")):
         base = (spark.range(rows)
                 .select(F.col("id").alias("score"),
                         (F.xxhash64("id") % 1000).alias("v")))
-        gw = (W2.orderBy("score")
-              .rowsBetween(W2.unboundedPreceding, W2.currentRow))
-
-        def window_path():
-            force(base.select("score", F.sum("v").over(gw).alias("cum")))
-
         tag = f"{rows:.0e}".replace("+0", "").replace("+", "")
-        results[f"prefix_global_window_{tag}"] = best_of(window_path, runs=2)
+        results[f"prefix_global_window_{tag}"] = best_of(
+            lambda: force(running_sums(base, ["score"], {"cum": "v"})),
+            runs=2)
         # unpersist happens OUTSIDE the timed region (same rule as the
         # as-of A/B above: the window arm has no analogous teardown)
         results[f"prefix_partitioned_{tag}"] = best_of(
-            lambda: force(partitioned_cumulative_sums(
-                base, ["score"], {"cum": F.col("v")},
-                persisted_out=held)),
+            lambda: force(running_sums(base, ["score"], {"cum": "v"},
+                                       num_partitions=parts,
+                                       persisted_out=held)),
             runs=2, after=lambda: release(held))
 
     print(json.dumps({"sf_dir": SF_DIR, "rows": n, "hot_key_rows": hot,
