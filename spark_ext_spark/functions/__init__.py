@@ -22,7 +22,6 @@ __all__ = [
     "collect_array",
     "collect_array_sorted",
     "collect_array_distinct",
-    "gather_struct",
     "register_sql_functions",
     "zorder_key",
     "hilbert_key",
@@ -76,15 +75,6 @@ def collect_array_distinct(col: Column | str) -> Column:
     ``df.distinct().select(collectArray(...))``,
     ExtAggregatesSpec.scala:41-47) as a single aggregate."""
     return F.coalesce(F.collect_set(col), F.array())
-
-
-def gather_struct(key_col: Column | str, value_col: Column | str,
-                  key_name: str = "key", value_name: str = "value") -> Column:
-    """``struct(key, value)`` as used by Gather (Gather.scala:81-84):
-    value is always cast to double."""
-    key = F.col(key_col) if isinstance(key_col, str) else key_col
-    value = F.col(value_col) if isinstance(value_col, str) else value_col
-    return F.struct(key.alias(key_name), value.cast("double").alias(value_name))
 
 
 def zorder_key(a: Column | str, b: Column | str, bits: int = 16) -> Column:

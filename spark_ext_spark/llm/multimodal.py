@@ -23,7 +23,6 @@ payloads fits executor memory.
 from __future__ import annotations
 
 import hashlib
-import warnings
 from collections.abc import Iterator, Sequence
 
 import numpy as np
@@ -54,10 +53,6 @@ MEDIA_META_SCHEMA = MEDIA_META_TYPE.simpleString()
 # Stub-resize output payload size; byte_len reports the SAME constant,
 # so changing the digest size cannot silently desynchronize the two.
 _RESIZE_DIGEST_SIZE = 32
-
-# One-time-per-process flag for the round-7 on_error default change
-# (injected decoders: 'null' → 'raise'); see decode_media.
-_WARNED_INJECTED_DEFAULT = False
 
 _MAGIC = [
     ("89504e47", "png"), ("ffd8ff", "jpeg"), ("47494638", "gif"),
@@ -285,26 +280,9 @@ def decode_media(df: DataFrame, real_decode: bool = False,
     error in new decoder code (wrong arity TypeError, NameError) fails
     fast instead of silently becoming an all-null column — pass
     ``on_error="null"`` explicitly once the decoder is trusted.
-    Callers in null mode should gate on the null-dim rate downstream.
-
-    .. versionchanged:: round 7
-       Injected decoders previously defaulted to ``"null"``; existing
-       call sites that rely on corrupt payloads being absorbed must
-       now pass ``on_error="null"`` explicitly (a one-time
-       FutureWarning flags call sites still relying on the implicit
-       default)."""
+    Callers in null mode should gate on the null-dim rate downstream."""
     if on_error is None:
         on_error = "raise" if decoder is not None else "null"
-        if decoder is not None:
-            global _WARNED_INJECTED_DEFAULT
-            if not _WARNED_INJECTED_DEFAULT:
-                _WARNED_INJECTED_DEFAULT = True
-                warnings.warn(
-                    "decode_media: the on_error default for injected "
-                    "decoders changed from 'null' to 'raise' — corrupt "
-                    "payloads now fail the job unless on_error='null' "
-                    "is passed explicitly (warned once per process)",
-                    FutureWarning, stacklevel=2)
     if on_error not in ("null", "raise"):
         raise ValueError(f"unknown on_error: {on_error!r}")
     if real_decode and decoder is None:

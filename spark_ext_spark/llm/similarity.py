@@ -1,5 +1,12 @@
 """Similarity search over embedding columns (``array<float>``).
 
+Every GEMM search here is one partition-local search followed by a
+global merge: (query, member) candidate rows are grouped — by hash
+shard, LSH bucket or IVF cell — and :func:`_gemm_groups` runs ONE numpy
+GEMM per group, sub-blocked to ≤ ``SHARD_ROWS`` vectors a side, that
+emits either per-query top-k (merged losslessly into the global top-k)
+or threshold pairs.
+
 - ``cosine_topk``: exact brute-force top-k — the corpus is hash-sharded
   and each (shard) co-group runs one numpy GEMM; shard-local winners
   merge losslessly into the global top-k. Nothing is broadcast or
@@ -16,8 +23,9 @@
   GEMM re-rank inside. Every stage before the final cosine is integer
   arithmetic, so a SQL oracle replays fit and search bit-for-bit.
 - ``embedding_near_dups``: cosine near-duplicate pairs (exact sharded
-  GEMM or LSH blocking); ``quantize_embeddings``: int8 quantization
-  with its reconstruction-error profile.
+  GEMM, or LSH blocking with an in-JVM pair join);
+  ``quantize_embeddings``: int8 quantization with its
+  reconstruction-error profile.
 
 The approximate paths (LSH and IVF) cache their bucket/cell frame once
 per call, hand it back through ``persisted_out`` for explicit release,
@@ -37,6 +45,11 @@ from pyspark.sql.window import Window
 __all__ = ["cosine_topk", "lsh_buckets", "lsh_topk",
            "fit_ivf_centroids_quantized", "ivf_topk_deterministic",
            "embedding_near_dups"]
+
+# Max vectors per side of one GEMM group: exact shards hold ≤ SHARD_ROWS
+# corpus rows and _block_grid splits hot shards/buckets/cells down to
+# it. Read at call time, so tests patch it to force blocking.
+SHARD_ROWS = 16384
 
 
 def _materialize_artifact(df: DataFrame, entry: str,
@@ -117,29 +130,30 @@ def _finite_vec(vec: Column, entry: str,
     return out
 
 
-def _nn_vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _nn_vectors(df: DataFrame, id_col: str, vec_col: str, entry: str,
+                dim: int | None = None) -> DataFrame:
     """The one invariant every search entry point shares: null
     embeddings are excluded (they can match nothing, and a single null
     row reaching a GEMM group turns the batch ragged and kills the
     task — at 100 TB, one bad row fails the job), and non-finite
-    components fail by name (_finite_vec). Returns the normalized
+    components — or, given ``dim``, wrong-length vectors — fail by
+    name under ``entry`` (_finite_vec). Returns the normalized
     (vec_id, vec) frame; the isNotNull predicate pushes down to the
     parquet scan."""
     return (df.filter(F.col(vec_col).isNotNull())
             .select(F.col(id_col).alias("vec_id"),
                     _finite_vec(F.col(vec_col).cast("array<double>"),
-                                "vector search").alias("vec")))
+                                entry, dim=dim).alias("vec")))
 
 
 def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int,
                 id_col: str = "vec_id", vec_col: str = "embedding",
-                round_to: int | None = None,
-                shard_rows: int = 16384) -> DataFrame:
+                round_to: int | None = None) -> DataFrame:
     """Exact top-k neighbors per query (excluding self-matches).
     Deterministic rank order: similarity desc, neighbor id asc.
 
     Distributed block-nested-loop: the corpus is hash-sharded into
-    groups of ≤ ``shard_rows`` vectors, every query probes every shard
+    groups of ≤ ``SHARD_ROWS`` vectors, every query probes every shard
     (explode over shard ids), and each (shard) co-group does ONE numpy
     GEMM emitting per-shard top-k; a final groupBy(query_id) merges
     shard-local winners into the exact global top-k (a candidate
@@ -151,18 +165,33 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int,
     exact search; use lsh_topk/ivf_topk_deterministic when S gets
     large.
     """
-    c, n_shards = _sharded(corpus, id_col, vec_col, shard_rows)
-    c = c.withColumn("role", F.lit("c"))
-    q = (_nn_vectors(queries, id_col, vec_col)
+    both, blocked = _exact_roles(queries, corpus, id_col, vec_col,
+                                 "cosine_topk")
+    return _grouped_candidate_topk(both, "shard", k, round_to=round_to,
+                                   blocked=blocked)
+
+
+def _exact_roles(queries: DataFrame, corpus: DataFrame, id_col: str,
+                 vec_col: str, entry: str) -> tuple[DataFrame, bool]:
+    """(vec_id, vec, shard, role) rows of the exact paths, and whether
+    they need the block grid. Corpus rows ('c') land in shard
+    pmod(xxhash64(id), S), S sized so shards hold ≤ SHARD_ROWS vectors;
+    every query row ('q') probes all S shards. The count() is the only
+    driver-side job of the exact paths — a scalar aggregate, not a
+    materialization, so it is scale-safe. A one-shard self-search
+    provably fits one GEMM group (q side = corpus ≤ SHARD_ROWS), so it
+    skips the grid's sizing pass; otherwise the probe side replicates
+    every query into every shard and the grid bounds the groups."""
+    c = _nn_vectors(corpus, id_col, vec_col, entry)
+    n_shards = max(1, math.ceil(c.count() / SHARD_ROWS))
+    c = (c.withColumn("shard", F.pmod(F.xxhash64(F.col("vec_id")),
+                                      F.lit(n_shards)).cast("int"))
+         .withColumn("role", F.lit("c")))
+    q = (_nn_vectors(queries, id_col, vec_col, entry)
          .withColumn("shard",
                      F.explode(F.sequence(F.lit(0), F.lit(n_shards - 1))))
          .withColumn("role", F.lit("q")))
-    # self-search over a ≤shard_rows corpus provably fits one GEMM
-    # group (q side = corpus) — skip the block grid's sizing pass
-    sub = None if (queries is corpus and n_shards == 1) else shard_rows
-    return _grouped_candidate_topk(q.unionByName(c), "shard", k,
-                                   round_to=round_to,
-                                   shard_rows=sub)
+    return q.unionByName(c), not (queries is corpus and n_shards == 1)
 
 
 def _id_type(df: DataFrame, col: str) -> str:
@@ -232,37 +261,23 @@ def _role_split_gemm(pdf: pd.DataFrame, round_to: int | None):
     return qs, cs, sims
 
 
-def _sharded(df: DataFrame, id_col: str, vec_col: str,
-             shard_rows: int) -> tuple[DataFrame, int]:
-    """((vec_id, vec, shard), S) with shard = pmod(xxhash64(id), S)
-    where S sizes shards to ≤ shard_rows vectors. The count() is the
-    only driver-side job in the exact-GEMM paths — a scalar aggregate,
-    not a materialization, so it is scale-safe."""
-    nn = _nn_vectors(df, id_col, vec_col)
-    cnt = nn.count()
-    n_shards = max(1, math.ceil(cnt / shard_rows))
-    out = nn.withColumn(
-        "shard", F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_shards))
-                  .cast("int"))
-    return out, n_shards
-
-
 def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
                         id_col: str = "vec_id", vec_col: str = "embedding",
                         method: str = "exact",
                         n_planes: int = 8, seed: int = 42,
                         round_to: int | None = 4,
-                        shard_rows: int = 16384,
                         persisted_out: list | None = None) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, sim ≥ τ).
 
     method="exact": all-pairs via the sharded co-group GEMM — the
-    corpus is hash-sharded (≤ shard_rows vectors per shard), every row
+    corpus is hash-sharded (≤ SHARD_ROWS vectors per shard), every row
     probes every shard, and each shard group runs one numpy GEMM
     emitting pairs with q_id < c_id (each unordered pair surfaces in
     exactly one shard — the one owning its larger id — so no dedup
-    pass). No driver materialization; quadratic probe replication is
-    inherent to exactness, so prefer method="lsh" at large N.
+    pass; the block grid keeps that true, as every (q, c) pair meets in
+    exactly one block). No driver materialization; quadratic probe
+    replication is inherent to exactness, so prefer method="lsh" at
+    large N.
     method="lsh": hyperplane-bucket blocking then exact cosine within
     buckets (+1-bit multiprobe) — the 100 TB path; recall follows the
     LSH S-curve, candidates come from equi-joins only.
@@ -270,8 +285,6 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
     ``persisted_out`` receives the cached LSH bucket frame; the exact
     path caches no artifact, so passing it with method="exact" raises
     instead of silently handing back nothing."""
-    import pandas as pd
-
     if method != "lsh" and persisted_out is not None:
         raise ValueError(
             "persisted_out applies to method='lsh' only — the exact "
@@ -283,25 +296,18 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
         b = _materialize_artifact(
             lsh_buckets(df, n_planes, seed, id_col, vec_col),
             "embedding_near_dups[lsh]", persisted_out)
-        probes = F.array(F.col("bucket"),
-                         *[F.col("bucket").bitwiseXOR(F.lit(1 << p))
-                           for p in range(n_planes)])
-        # Norms are per-VECTOR quantities: compute them on the two
-        # V-sized join inputs instead of per candidate PAIR (r12
-        # optimization round). The pair expression previously ran five
-        # interpreted array folds per candidate row (dot + the norm
-        # pair, with each norm evaluated twice across the zero-guard
-        # and the division); now only the dot fold remains pair-side.
-        # Values are bit-identical: the norm sub-expression is
-        # unchanged (same fold order), it just moves below the join —
-        # measured 2.2 s → 0.9 s warm on the sf0.1 candidate set with
-        # 0 bitwise diffs over the surviving pairs.
+        # The pair cosine stays a JVM join rather than the GEMM kernel:
+        # on the 600-vector bench corpus (local[4]) a kernel variant
+        # returned the same 60 pairs at a median 2.54 s vs 1.80 s.
+        # Norms are per-vector, so they are computed on the two join
+        # inputs, not per candidate pair (OPTIMIZATION_r12.md).
         nrm = F.sqrt(F.aggregate(
             F.transform(F.col("vec"), lambda x: x * x),
             F.lit(0.0), lambda acc, v: acc + v))
         a = (b.select(F.col("vec_id").alias("id_a"),
                       F.col("vec").alias("va"), nrm.alias("__na"),
-                      F.explode(probes).alias("bucket")))
+                      F.explode(_bucket_probes(n_planes))
+                      .alias("bucket")))
         c = b.select(F.col("vec_id").alias("id_b"),
                      F.col("vec").alias("vb"), nrm.alias("__nb"),
                      "bucket")
@@ -319,44 +325,23 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
                 .groupBy("id_a", "id_b").agg(F.max("sim").alias("sim"))
                 .filter(F.col("sim") >= threshold))
 
-    c, n_shards = _sharded(df, id_col, vec_col, shard_rows)
-    c = c.withColumn("role", F.lit("c"))
-    q = (_nn_vectors(df, id_col, vec_col)
-         .withColumn("shard",
-                     F.explode(F.sequence(F.lit(0), F.lit(n_shards - 1))))
-         .withColumn("role", F.lit("q")))
-
-    def group_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        split = _role_split_gemm(pdf, round_to)
-        if split is None:
-            return pd.DataFrame({"id_a": [], "id_b": [], "sim": []})
-        qs, cs, sims = split
+    def group_pairs(qs: pd.DataFrame, cs: pd.DataFrame,
+                    sims: np.ndarray) -> pd.DataFrame:
         c_ids = cs["vec_id"].to_numpy()
-        q_ids = qs["vec_id"].to_numpy()
         out_a, out_b, out_s = [], [], []
-        for i, qid in enumerate(q_ids):
+        for i, qid in enumerate(qs["vec_id"].to_numpy()):
             mask = (c_ids > qid) & (sims[i] >= threshold)
             out_a.extend([qid] * int(mask.sum()))
             out_b.extend(c_ids[mask].tolist())
             out_s.extend(sims[i][mask].tolist())
         return pd.DataFrame({"id_a": out_a, "id_b": out_b, "sim": out_s})
 
-    # block the per-shard GEMM: the probe side replicates the WHOLE
-    # corpus into every shard group, so without sub-sharding each
-    # pandas group holds N + shard_rows rows. Every unordered pair
-    # still meets exactly once — in the single (shard, cs, qs) block
-    # where cs = hash(c) and qs = hash(q) — so no dedup pass is needed.
-    # A one-shard corpus (N ≤ shard_rows) provably fits one group:
-    # skip the grid's sizing pass.
-    both = q.unionByName(c)
+    both, blocked = _exact_roles(df, df, id_col, vec_col,
+                                 "embedding_near_dups")
     idt = _id_type(df, id_col)
-    out_schema = f"id_a {idt}, id_b {idt}, sim double"
-    if n_shards == 1:
-        return both.groupBy("shard").applyInPandas(group_pairs,
-                                                   schema=out_schema)
-    blocked = _block_grid(both, "shard", shard_rows)
-    return (blocked.groupBy("shard", "__cs", "__qs")
-            .applyInPandas(group_pairs, schema=out_schema))
+    return _gemm_groups(both, "shard", group_pairs,
+                        f"id_a {idt}, id_b {idt}, sim double", round_to,
+                        blocked=blocked)
 
 
 def _infer_dim(df: DataFrame, vec_col: str) -> int:
@@ -374,6 +359,15 @@ def _infer_dim(df: DataFrame, vec_col: str) -> int:
 def _projections(dim: int, n_planes: int, seed: int) -> np.ndarray:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim))
+
+
+def _bucket_probes(n_flips: int) -> Column:
+    """A vector's own LSH bucket followed by the ``n_flips`` buckets one
+    sign bit away (multiprobe) — own bucket first, as _explode_roles
+    requires."""
+    return F.array(F.col("bucket"),
+                   *[F.col("bucket").bitwiseXOR(F.lit(1 << p))
+                     for p in range(n_flips)])
 
 
 def _explode_roles(df: DataFrame, probe_groups: Column,
@@ -413,29 +407,22 @@ def lsh_buckets(df: DataFrame, n_planes: int = 8, seed: int = 42,
     if dim is None:
         dim = _infer_dim(df, vec_col)
     planes = _projections(dim, n_planes, seed)
-    # guarded ONCE and reused for both the sign fold and the output
-    # vec, so a pruned projection (e.g. the id-only uniqueness scan)
-    # cannot drop the non-finite check with the column
-    v = _finite_vec(F.col(vec_col).cast("array<double>"),
-                    "lsh_buckets", dim=dim)
+    # the sign fold reads the guarded vec, so a projection that prunes
+    # vec (e.g. one keeping only the bucket) still runs the check
     bucket = F.lit(0)
     for p in range(n_planes):
         row = F.lit([float(x) for x in planes[p]])
-        dot = F.aggregate(F.zip_with(v, row, lambda x, y: x * y),
+        dot = F.aggregate(F.zip_with(F.col("vec"), row, lambda x, y: x * y),
                           F.lit(0.0), lambda acc, z: acc + z)
         bucket = bucket + F.when(dot >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-    # null embeddings excluded (same contract as _sharded: they match
-    # nothing, and a null vec row crashes the downstream GEMM group)
-    return (df.filter(F.col(vec_col).isNotNull())
-            .select(F.col(id_col).alias("vec_id"),
-                    v.alias("vec"), bucket.alias("bucket")))
+    return (_nn_vectors(df, id_col, vec_col, "lsh_buckets", dim=dim)
+            .withColumn("bucket", bucket))
 
 
 def lsh_topk(df: DataFrame, k: int, n_planes: int = 8, seed: int = 42,
              id_col: str = "vec_id", vec_col: str = "embedding",
              multiprobe: bool = True,
              round_to: int | None = None,
-             shard_rows: int = 16384,
              persisted_out: list | None = None,
              dim: int | None = None) -> DataFrame:
     """Approximate top-k within LSH buckets; multiprobe also searches
@@ -443,10 +430,8 @@ def lsh_topk(df: DataFrame, k: int, n_planes: int = 8, seed: int = 42,
     the join fan-out asymptotically).
 
     IVF-style execution: bucket members ('c' rows) plus probing
-    queries ('q' rows) are co-grouped per bucket, and each group does
-    ONE numpy GEMM (queries × members) emitting per-query bucket-local
-    top-k; a final groupBy merges bucket-local candidates into global
-    top-k. Vectors materialize once per probe, never per pair.
+    queries ('q' rows) co-group per bucket for :func:`_gemm_groups`;
+    bucket-local top-k merge into the global top-k.
 
     ``dim`` pins the embedding dimensionality up front (the planes are
     dim-sized plan literals). When omitted it is probed with a one-row
@@ -456,23 +441,14 @@ def lsh_topk(df: DataFrame, k: int, n_planes: int = 8, seed: int = 42,
     should pass it so candidate generation is fully lazy. Results are
     identical either way; a wrong ``dim`` fails loudly at the
     per-row _finite_vec guard instead of mis-projecting."""
-    import pandas as pd
-
     # cached: the candidate explode and the block grid's bucket-sizing
     # aggregate both read the bucket projection
     b = _materialize_artifact(
         lsh_buckets(df, n_planes, seed, id_col, vec_col, dim=dim),
         "lsh_topk", persisted_out)
-    if multiprobe:
-        probes = F.array(F.col("bucket"),
-                         *[F.col("bucket").bitwiseXOR(F.lit(1 << p))
-                           for p in range(n_planes)])
-    else:
-        probes = F.array(F.col("bucket"))
+    probes = _bucket_probes(n_planes if multiprobe else 0)
     both = _explode_roles(b, probes, "bucket")  # own bucket = probes[0]
-
-    return _grouped_candidate_topk(both, "bucket", k, round_to=round_to,
-                                   shard_rows=shard_rows)
+    return _grouped_candidate_topk(both, "bucket", k, round_to=round_to)
 
 
 def _block_grid(both: DataFrame, group_col: str,
@@ -529,31 +505,41 @@ def _block_grid(both: DataFrame, group_col: str,
                     F.col("__blk.qs").alias("__qs")))
 
 
+def _gemm_groups(both: DataFrame, group_col: str, emit, schema: str,
+                 round_to: int | None, blocked: bool = True) -> DataFrame:
+    """The module's one partition-local search: per ``group_col`` group
+    — cut into :func:`_block_grid` blocks of ≤ SHARD_ROWS vectors a side
+    unless ``blocked=False`` — ONE numpy GEMM of probing queries ('q'
+    rows) × group members ('c' rows) (:func:`_role_split_gemm`), whose
+    (qs, cs, sims) ``emit`` turns into rows of ``schema``. A group
+    missing either role emits nothing. Vectors materialize once per
+    probe, never per pair."""
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        split = _role_split_gemm(pdf, round_to)
+        return pd.DataFrame() if split is None else emit(*split)
+
+    keys = [group_col]
+    if blocked:
+        both = _block_grid(both, group_col, SHARD_ROWS)
+        keys += ["__cs", "__qs"]
+    return both.groupBy(*keys).applyInPandas(run, schema=schema)
+
+
 def _grouped_candidate_topk(both: DataFrame, group_col: str, k: int,
                             round_to: int | None = None,
-                            shard_rows: int | None = 16384) -> DataFrame:
-    """Shared IVF-style execution for bucketed ANN: per group, ONE
-    numpy GEMM of probing queries ('q' rows) × group members ('c'
-    rows) emits per-query group-local top-k; a global groupBy then
-    merges multi-probe hits and re-ranks. Vectors materialize once per
-    probe, never per pair. round_to pins similarity decimals BEFORE
-    ranking so tie-breaks are reproducible across engines.
-
-    ``shard_rows`` caps pandas-group size via :func:`_block_grid`
-    sub-sharding (None disables). The per-block top-k → global merge
-    is lossless: a candidate dropped at block rank > k is beaten by k
-    block-mates that also beat it in the merged bucket."""
-    import pandas as pd
-
-    def group_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        split = _role_split_gemm(pdf, round_to)
-        if split is None:
-            return pd.DataFrame(columns=["query_id", "neighbor_id", "sim"])
-        qs, cs, sims = split
+                            blocked: bool = True) -> DataFrame:
+    """Per-query top-k over grouped candidates: each :func:`_gemm_groups`
+    block emits its per-query local top-k; a global groupBy then merges
+    multi-probe hits and re-ranks. round_to pins similarity decimals
+    BEFORE ranking so tie-breaks are reproducible across engines. The
+    per-block top-k → global merge is lossless: a candidate dropped at
+    block rank > k is beaten by k block-mates that also beat it
+    globally."""
+    def group_topk(qs: pd.DataFrame, cs: pd.DataFrame,
+                   sims: np.ndarray) -> pd.DataFrame:
         c_ids = cs["vec_id"].to_numpy()
-        q_ids = qs["vec_id"].to_numpy()
         out_q, out_n, out_s = [], [], []
-        for i, qid in enumerate(q_ids):
+        for i, qid in enumerate(qs["vec_id"].to_numpy()):
             s = sims[i]
             valid = c_ids != qid
             order = np.lexsort((c_ids[valid], -s[valid]))[:k]
@@ -564,12 +550,10 @@ def _grouped_candidate_topk(both: DataFrame, group_col: str, k: int,
                              "sim": out_s})
 
     idt = _id_type(both, "vec_id")
-    group_cols = [group_col]
-    if shard_rows is not None:
-        both = _block_grid(both, group_col, shard_rows)
-        group_cols = [group_col, "__cs", "__qs"]
-    local = both.groupBy(*group_cols).applyInPandas(
-        group_topk, schema=f"query_id {idt}, neighbor_id {idt}, sim double")
+    local = _gemm_groups(
+        both, group_col, group_topk,
+        f"query_id {idt}, neighbor_id {idt}, sim double", round_to,
+        blocked=blocked)
     merged = (local.groupBy("query_id", "neighbor_id")
               .agg(F.max("sim").alias("sim")))  # dedup multiprobe hits
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"),
@@ -582,18 +566,15 @@ def _grouped_candidate_topk(both: DataFrame, group_col: str, k: int,
 IVF_QUANT_SCALE = 1_000_000
 
 
-def _ivf_quantize_expr(vec_col: str,
-                       dim: int | None = None) -> Column:
+def _ivf_quantize_expr(vec: Column) -> Column:
     """floor(x * 1e6) as array<long> — the integer-lattice projection
     that makes Lloyd's algorithm bit-exact across engines (integer
-    sums are associative; double sums are not). The _finite_vec guard
-    rides here so the quantized FIT fails by name on a NaN corpus
-    instead of an opaque ARITHMETIC_OVERFLOW three expressions later
-    (or a silent Long-clamp under non-ANSI)."""
+    sums are associative; double sums are not). ``vec`` must be the
+    _nn_vectors-guarded column, so a NaN corpus fails by name instead
+    of an opaque ARITHMETIC_OVERFLOW three expressions later (or a
+    silent Long-clamp under non-ANSI)."""
     return F.transform(
-        _finite_vec(F.col(vec_col).cast("array<double>"),
-                    "ivf quantizer", dim=dim),
-        lambda x: F.floor(x * F.lit(float(IVF_QUANT_SCALE))).cast("long"))
+        vec, lambda x: F.floor(x * F.lit(float(IVF_QUANT_SCALE))).cast("long"))
 
 
 def _ivf_cells_by_dist(cents: list[list[int]], qv_col: str = "qv") -> Column:
@@ -637,9 +618,8 @@ def fit_ivf_centroids_quantized(df: DataFrame, n_centroids: int = 16,
     # null embeddings excluded (same contract as every search entry
     # point) — a null row among the n_centroids smallest ids would
     # otherwise seed a null centroid and crash the fit
-    q = (df.filter(F.col(vec_col).isNotNull())
-         .select(F.col(id_col).alias("vec_id"),
-                 _ivf_quantize_expr(vec_col, dim=dim).alias("qv"))
+    q = (_nn_vectors(df, id_col, vec_col, "ivf quantizer", dim=dim)
+         .select("vec_id", _ivf_quantize_expr(F.col("vec")).alias("qv"))
          .cache())
     init = q.orderBy("vec_id").limit(n_centroids).collect()
     cents = [[int(x) for x in r["qv"]] for r in init]
@@ -674,7 +654,6 @@ def ivf_topk_deterministic(df: DataFrame, k: int, n_centroids: int = 16,
                            vec_col: str = "embedding",
                            round_to: int = 4,
                            centroids: list[list[int]] | None = None,
-                           shard_rows: int = 16384,
                            persisted_out: list | None = None) -> DataFrame:
     """IVF ANN over the quantized-Lloyd coarse quantizer (vs
     lsh_topk's data-oblivious hyperplanes): the corpus becomes inverted
@@ -696,25 +675,18 @@ def ivf_topk_deterministic(df: DataFrame, k: int, n_centroids: int = 16,
     if centroids is None:
         centroids = fit_ivf_centroids_quantized(
             df, n_centroids, n_iter, id_col, vec_col)
-    gv = _finite_vec(F.col(vec_col).cast("array<double>"),
-                     "ivf_topk_deterministic", dim=len(centroids[0]))
-    emb = (df.filter(F.col(vec_col).isNotNull())  # nulls match nothing
-           .select(F.col(id_col).alias("vec_id"), gv.alias("vec"),
-                   F.transform(gv, lambda x: F.floor(
-                       x * F.lit(float(IVF_QUANT_SCALE))).cast("long"))
-                   .alias("qv")))
-    cbd = _ivf_cells_by_dist(centroids)
     # cached: the explode branch and the block grid's sizing aggregate
     # both read the interpreted n_centroids × dim distance fold, and
     # uncached each reader re-evaluates it (measured 2-3× slower)
     emb = _materialize_artifact(
-        emb.withColumn("__cbd", cbd).drop("qv"),
+        _nn_vectors(df, id_col, vec_col, "ivf_topk_deterministic",
+                    dim=len(centroids[0]))
+        .withColumn("qv", _ivf_quantize_expr(F.col("vec")))
+        .withColumn("__cbd", _ivf_cells_by_dist(centroids)).drop("qv"),
         "ivf_topk_deterministic", persisted_out)
     probes = F.transform(F.slice("__cbd", 1, n_probes), lambda s: s["cell"])
     both = _explode_roles(emb, probes, "cell")  # member cell = probes[0]
-    return _grouped_candidate_topk(both, "cell", k,
-                                   round_to=round_to,
-                                   shard_rows=shard_rows)
+    return _grouped_candidate_topk(both, "cell", k, round_to=round_to)
 
 
 def quantize_embeddings(df: DataFrame, id_col: str = "vec_id",

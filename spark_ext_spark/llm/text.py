@@ -10,7 +10,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_ext_spark.llm.dedup import normalize_text
+from spark_ext_spark.llm.dedup import normalize_text, shingle_array
 
 __all__ = ["tokens", "text_stats", "quality_score", "language_id",
            "fingerprint", "tfidf_top_terms", "chunk_documents",
@@ -93,24 +93,17 @@ def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str,
     position-aware, local complement to MinHash (which sketches the
     global shingle SET and can't localize matches).
 
-    Returns distinct (doc, fp) rows. All-JVM: k-gram build via
-    sequence/transform, the 60-bit hash is an md5-prefix (base-16
+    Returns distinct (doc, fp) rows. All-JVM: k-grams from
+    dedup.shingle_array, the 60-bit hash is an md5-prefix (base-16
     conv — codegen, and DuckDB replays it exactly; xxhash64 does not
     exist there), window minima via array_min over slices."""
-    from spark_ext_spark.llm.dedup import normalize_text
     from spark_ext_spark.sources.io import ensure_fanout
 
     wdf = ensure_fanout(
         df.select(F.col(id_col).alias("doc"),
                   F.split(normalize_text(text_col), " ").alias("__w")),
         "doc")
-    n_words = F.size("__w")
-    gram_idx = F.when(
-        n_words >= k,
-        F.sequence(F.lit(0), n_words - F.lit(k))
-    ).otherwise(F.array().cast("array<int>"))
-    gram = F.transform(gram_idx, lambda i: F.concat_ws(
-        " ", *[F.element_at("__w", i + j + 1) for j in range(k)]))
+    gram = shingle_array(F.col("__w"), k)
     # md5-prefix 60-bit hash: deterministic, engine-replayable
     hashes = F.transform(
         gram, lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10)

@@ -30,6 +30,8 @@ from pyspark.ml.util import DefaultParamsReadable, DefaultParamsWritable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_ext_spark.functions import collect_array
+
 VALUE_AGGS = ("sum", "count")
 
 
@@ -107,7 +109,7 @@ class Gather(Transformer, DefaultParamsReadable, DefaultParamsWritable):
         struct_col = F.struct(
             F.col(key).alias(key),
             F.col("__gather_value").alias(value))
-        arr = F.coalesce(F.collect_list(struct_col), F.array())
+        arr = collect_array(struct_col)
         if self.getOrDefault(self.sortKeys):
             arr = F.sort_array(arr)
         return grouped.groupBy(*pk).agg(arr.alias(out))

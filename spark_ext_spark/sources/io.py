@@ -179,8 +179,7 @@ def _plan_has_shuffle_node(jplan) -> bool:
     return False
 
 
-def ensure_fanout(df: DataFrame, *key_cols: str,
-                  target: int | None = None) -> DataFrame:
+def ensure_fanout(df: DataFrame, *key_cols: str) -> DataFrame:
     """Re-balance BEFORE a row-amplifying op (explode/shingle/signature
     stages multiply rows 50-300×). Input partitioning is sized by FILE
     BYTES, so a compact source (one small parquet file → one task)
@@ -208,7 +207,7 @@ def ensure_fanout(df: DataFrame, *key_cols: str,
         return df
     if _plan_has_shuffle_node(df._jdf.queryExecution().optimizedPlan()):
         return df
-    target = target or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return (df.repartition(target, *[F.col(c) for c in key_cols])

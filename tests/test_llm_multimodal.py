@@ -487,25 +487,3 @@ def test_decode_on_error_raise_propagates(spark):
     with pytest.raises(ValueError, match="on_error"):
         decode_media(attach_media(df, "doc_id", "payload"),
                      decoder=wrong_arity, on_error="ignore")
-
-
-def test_injected_decoder_implicit_default_warns_once(spark):
-    """The round-7 on_error default flip (injected decoders: 'null' →
-    'raise') emits ONE FutureWarning per process for call sites still
-    relying on the implicit default; explicit on_error never warns."""
-    import warnings
-
-    from spark_ext_spark.llm import multimodal as mm
-    docs = spark.createDataFrame([(1, b"abc")], "doc_id long, payload binary")
-    media = mm.attach_media(docs, "doc_id", "payload")
-    dec = lambda payload: (len(payload), 7, 1)  # noqa: E731
-    mm._WARNED_INJECTED_DEFAULT = False
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        mm.decode_media(media, decoder=dec)
-        mm.decode_media(media, decoder=dec)           # second: silent
-        mm.decode_media(media, decoder=dec, on_error="null")  # explicit
-        mm.decode_media(media, real_decode=False)     # fake path
-    flips = [x for x in w if issubclass(x.category, FutureWarning)
-             and "on_error default" in str(x.message)]
-    assert len(flips) == 1, [str(x.message) for x in w]

@@ -138,42 +138,106 @@ def test_ivf_probe_count_trades_recall(vecs, vecs_np):
 
 # --- hot-bucket sub-sharding (block-grid decomposition) --------------------
 
-def _topk_rows(df):
+def _topk_rows(rows):
     return sorted((r["query_id"], r["rank"], r["neighbor_id"],
-                   round(r["sim"], 9)) for r in df.collect())
+                   round(r["sim"], 9)) for r in rows)
 
 
-def test_hot_bucket_lsh_blocking_preserves_results(spark):
+def _with_shard_rows(monkeypatch, shard_rows, build):
+    """Collect ``build()`` with ``similarity.SHARD_ROWS`` patched — 8
+    forces the block grid onto every group, 10**9 leaves one block."""
+    from spark_ext_spark.llm import similarity
+    monkeypatch.setattr(similarity, "SHARD_ROWS", shard_rows)
+    return build().collect()
+
+
+def test_hot_bucket_lsh_blocking_preserves_results(spark, monkeypatch):
     """Engineered hot bucket: every vector on the same side of every
     hyperplane (strictly positive coordinates) → ONE LSH bucket holds
-    the whole corpus. Tiny shard_rows must sub-shard it without
+    the whole corpus. A tiny SHARD_ROWS must sub-shard it without
     changing a single (query, rank, neighbor, sim) row."""
     rng = np.random.default_rng(11)
     v = np.abs(rng.standard_normal((40, DIM))) + 0.1
     df = spark.createDataFrame(
         [(i, v[i].tolist()) for i in range(40)],
         "vec_id long, embedding array<double>")
-    base = lsh_topk(df, k=4, round_to=6, shard_rows=10**9)
-    blocked = lsh_topk(df, k=4, round_to=6, shard_rows=8)
+
+    def run(sr):
+        return _with_shard_rows(monkeypatch, sr, lambda: lsh_topk(
+            df, k=4, round_to=6))
+    base = run(10**9)
+    blocked = run(8)
     assert _topk_rows(blocked) == _topk_rows(base)
 
 
-def test_hot_cell_ivf_blocking_preserves_results(vecs):
+def test_hot_cell_ivf_blocking_preserves_results(vecs, monkeypatch):
     from spark_ext_spark.llm.similarity import ivf_topk_deterministic
-    # n_centroids=2 over clustered data → big hot cells vs shard_rows=8
-    base = ivf_topk_deterministic(vecs, k=4, n_centroids=2, n_probes=2,
-                                  shard_rows=10**9)
-    blocked = ivf_topk_deterministic(vecs, k=4, n_centroids=2, n_probes=2,
-                                     shard_rows=8)
+    # n_centroids=2 over clustered data → big hot cells vs SHARD_ROWS=8
+
+    def run(sr):
+        return _with_shard_rows(monkeypatch, sr, lambda: (
+            ivf_topk_deterministic(vecs, k=4, n_centroids=2, n_probes=2)))
+    base = run(10**9)
+    blocked = run(8)
     assert _topk_rows(blocked) == _topk_rows(base)
 
 
-def test_near_dups_exact_blocking_preserves_pairs(vecs):
+def test_near_dups_exact_blocking_preserves_pairs(vecs, monkeypatch):
     def pairs(sr):
         return sorted((r["id_a"], r["id_b"], round(r["sim"], 9))
-                      for r in embedding_near_dups(
-                          vecs, threshold=0.6, shard_rows=sr).collect())
+                      for r in _with_shard_rows(
+                          monkeypatch, sr, lambda: embedding_near_dups(
+                              vecs, threshold=0.6)))
     assert pairs(8) == pairs(10**9)
+
+
+def test_cosine_topk_blocking_preserves_results(vecs, monkeypatch):
+    """8 shards of the 60-vector corpus, each cut by the block grid,
+    give the same rows as one unblocked self-search group."""
+    def run(sr):
+        return _with_shard_rows(monkeypatch, sr, lambda: cosine_topk(
+            vecs, vecs, k=5, round_to=6))
+    assert _topk_rows(run(8)) == _topk_rows(run(10**9))
+
+
+def test_gemm_search_job_pins(spark, vecs, count_jobs, monkeypatch):
+    """Spark jobs for plan build + collect() of every GEMM search entry
+    point on the 60-vector fixture, unblocked and with SHARD_ROWS=8
+    (only the exact paths change: LSH/IVF are always gridded) — the
+    latency floor of a small search. The pins equal the counts from
+    before the searches shared one GEMM kernel. Artifacts are released
+    after each run so every count starts from the same cache state."""
+    from spark_ext_spark.llm import similarity
+    # a cache hit on an artifact an earlier test left behind saves a job
+    spark.catalog.clearCache()
+    vecs.cache().count()   # materialized outside the counts
+    held: list = []
+    runs = {
+        "cosine_topk": lambda: cosine_topk(vecs, vecs, k=5).collect(),
+        "near_dups_exact": lambda: embedding_near_dups(
+            vecs, threshold=0.9).collect(),
+        "near_dups_lsh": lambda: embedding_near_dups(
+            vecs, threshold=0.9, method="lsh",
+            persisted_out=held).collect(),
+        "lsh_topk": lambda: lsh_topk(vecs, k=3,
+                                     persisted_out=held).collect(),
+        "ivf_topk": lambda: similarity.ivf_topk_deterministic(
+            vecs, k=3, n_centroids=8, persisted_out=held).collect(),
+    }
+
+    def jobs(fn):
+        n = count_jobs(fn)
+        for df in held:
+            df.unpersist()
+        held.clear()
+        return n
+
+    pins = {"cosine_topk": 6, "near_dups_exact": 4, "near_dups_lsh": 8,
+            "lsh_topk": 11, "ivf_topk": 18}
+    assert {name: jobs(fn) for name, fn in runs.items()} == pins
+    monkeypatch.setattr(similarity, "SHARD_ROWS", 8)
+    pins.update(cosine_topk=8, near_dups_exact=6)
+    assert {name: jobs(fn) for name, fn in runs.items()} == pins
 
 
 def test_block_grid_caps_group_sizes(spark):
