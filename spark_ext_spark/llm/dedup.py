@@ -1,6 +1,9 @@
 """Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, SimHash.
 
-All four return DataFrames and keep every step distributed:
+All four read words from one tokenizer, :func:`normalize_text` split on
+its single space (the Arrow UDFs receive the normalized text, so they
+never re-derive it); all return DataFrames and keep every step
+distributed:
 
 - exact: hash groupBy on a normalized-text digest — one shuffle on the
   digest, map-side combined.
@@ -10,7 +13,7 @@ All four return DataFrames and keep every step distributed:
 - MinHash+LSH: k permutation minima via an Arrow-batched pandas_udf
   (md5-derived 64-bit base hash, k affine permutations), banded into
   LSH buckets; candidate pairs come from a bucket equi-join and are
-  optionally verified with exact Jaccard on the signatures.
+  verified with the signature-estimated Jaccard.
 - SimHash: 64-bit weighted-token fingerprint; near pairs blocked on
   max_hamming+1 bit bands (pigeonhole: ≤ max_hamming differing bits ⇒
   at least one band equal), so recall is exact at any radius.
@@ -37,15 +40,17 @@ _MERSENNE61 = (1 << 61) - 1
 
 
 def normalize_text(col: Column | str) -> Column:
-    """Canonical text form for dedup: lowercase, whitespace collapsed,
-    THEN trimmed. Pure JVM expression.
+    """The definition of a word for every text dedup operator: the
+    words of a document are this column split on ``" "``. Lowercase,
+    collapse each run of Java regex ``\\s`` (space, tab, newline,
+    VT, FF, CR) to one space, then trim spaces. Any other character,
+    Unicode whitespace such as U+00A0 included, stays inside its word.
+    Pure JVM expression; the DuckDB oracles replay it as
+    ``trim(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' ')``.
 
-    Collapse-before-trim is load-bearing: trim removes only SPACES, so
-    trimming first leaves a leading/trailing whitespace run (tab,
-    newline) that the collapse turns into a stray ' ' — and a stray
-    leading space becomes a phantom '' token after split, silently
-    desyncing every split-based consumer from Python's str.split()
-    semantics (the minhash/simhash Arrow UDFs tokenize that way)."""
+    Collapse-before-trim matters: trim removes only spaces, so trimming
+    first would leave a leading/trailing tab or newline that the
+    collapse turns into a stray ' ', a phantom '' word after split."""
     c = F.col(col) if isinstance(col, str) else col
     return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
 
@@ -72,21 +77,15 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def shingle_array(words: Column, n: int, hashed: bool = False) -> Column:
     """Array of n-word shingles from an already-materialized words
     array (duplicates kept, document order). ``words`` MUST be a
-    projected column, not the split expression itself — a lambda
+    projected column, not the split expression itself: a lambda
     referencing an unmaterialized expression re-evaluates it per
-    element access (3 regex runs per shingle — measured ~12× slower).
+    element access (measured in OPTIMIZATION_r12.md).
 
     ``hashed=True`` maps each shingle to a 64-bit xxhash64 of its word
-    tuple so downstream shuffles carry an 8-byte long instead of a
-    multi-word string. The hash is computed directly over the n words
-    (multi-arg xxhash64 folds each word into the running hash state) —
-    no intermediate shingle STRING is ever built, which skips one
-    concat_ws allocation + one string hash per shingle; a same-process
-    A/B at sf0.1 read the build stage ~1.5-2x faster with the candidate
-    pair set byte-identical (1 130 536 pairs). Word tuples map to
-    hashes injectively modulo hash collisions either way (words contain
-    no spaces, so the old space-joined string was injective too); the
-    negligible-collision contract of the hashed path is unchanged."""
+    tuple, folded directly over the n words, so no shingle string is
+    built and downstream shuffles carry an 8-byte long (A/B in
+    OPTIMIZATION_r12.md). Words contain no spaces, so the word tuple
+    and the space-joined string name the same shingle."""
     # sequence(0, negative) would DESCEND in Spark — guard short texts
     # to an explicitly empty index array instead.
     idx = F.when(F.size(words) >= n,
@@ -102,30 +101,27 @@ def shingle_array(words: Column, n: int, hashed: bool = False) -> Column:
 
 
 def word_shingles(df: DataFrame, id_col: str, text_col: str,
-                  n: int = 3, hashed: bool = False,
-                  unique_ids: bool = False) -> DataFrame:
-    """Distinct (id, n-word shingle) pairs, built with JVM array
+                  n: int = 3) -> DataFrame:
+    """(doc, shingle) rows: each document's distinct n-word shingles as
+    xxhash64 longs (:func:`shingle_array`), built with JVM array
     expressions (split → sequence → transform) — no Python.
 
-    ``unique_ids=True`` asserts the input has one row per id:
-    within-row dedup (array_distinct before the explode) then already
-    yields globally-distinct (id, shingle) pairs, so the shuffling
-    ``.distinct()`` over the exploded table — the single biggest stage
-    of a cold run — is skipped."""
+    Assumes one row per id: the within-row array_distinct then already
+    makes the pairs distinct, so no dedup shuffle runs over the
+    exploded table."""
     from spark_ext_spark.sources.io import ensure_fanout
     wdf = ensure_fanout(
         df.select(F.col(id_col).alias("doc"),
                   F.split(normalize_text(text_col), " ").alias("__words")),
         "doc")
-    shingle = shingle_array(F.col("__words"), n, hashed=hashed)
-    out = wdf.select("doc", F.explode(F.array_distinct(shingle)).alias("shingle"))
-    return out if unique_ids else out.distinct()
+    shingle = shingle_array(F.col("__words"), n, hashed=True)
+    return wdf.select("doc",
+                      F.explode(F.array_distinct(shingle)).alias("shingle"))
 
 
 def blocked_pair_counts(df: DataFrame, id_col: str, text_col: str,
                         n: int = 3,
-                        max_shingle_df: int | None = 1000,
-                        unique_ids: bool = True) -> DataFrame:
+                        max_shingle_df: int | None = 1000) -> DataFrame:
     """The shared candidate core of n-gram set-overlap dedup:
     (doc_a, doc_b, shared, n_a, n_b) for every document pair sharing
     ≥1 shingle — Jaccard, containment, overlap coefficient etc. are
@@ -139,18 +135,14 @@ def blocked_pair_counts(df: DataFrame, id_col: str, text_col: str,
     shingle that common carries no dedup signal but would create a
     quadratic bucket at scale).
 
-    Each shingle string is replaced by its xxhash64 before the
-    distinct/cap/self-join, shrinking the shuffle key from a ~20-40
-    byte string to 8 bytes; counts are unchanged barring a 64-bit
-    collision (P ≈ d²/2⁶⁵ — negligible below ~10¹² distinct shingles).
-
-    ``unique_ids`` (default True — one row per document id) lets the
-    shingle table skip its dedup shuffle; set False if ids can repeat.
+    Shingles are :func:`word_shingles`' xxhash64 longs, so the cap and
+    the self-join shuffle 8-byte keys; counts are exact barring a
+    64-bit collision (P ≈ d²/2⁶⁵ — negligible below ~10¹² distinct
+    shingles). Ids must be unique, as :func:`word_shingles` assumes.
     """
     from pyspark.sql.window import Window
 
-    sh = word_shingles(df, id_col, text_col, n, hashed=True,
-                       unique_ids=unique_ids)
+    sh = word_shingles(df, id_col, text_col, n)
     # NULL-id docs name no retrievable document: dropped BEFORE the df
     # cap, so they never ride the self-join nor count toward shingle df
     # (a semantics choice, pinned by
@@ -185,13 +177,11 @@ def blocked_pair_counts(df: DataFrame, id_col: str, text_col: str,
 
 def jaccard_similar_pairs(df: DataFrame, id_col: str, text_col: str,
                           n: int = 3, threshold: float = 0.5,
-                          max_shingle_df: int | None = 1000,
-                          unique_ids: bool = True) -> DataFrame:
+                          max_shingle_df: int | None = 1000) -> DataFrame:
     """Near-duplicate pairs by exact n-gram Jaccard ≥ threshold, over
     :func:`blocked_pair_counts`' capped shingle-equi-join candidates
     (never all-pairs)."""
-    pc = blocked_pair_counts(df, id_col, text_col, n, max_shingle_df,
-                             unique_ids)
+    pc = blocked_pair_counts(df, id_col, text_col, n, max_shingle_df)
     return (pc.withColumn("jaccard",
                           F.col("shared")
                           / (F.col("n_a") + F.col("n_b")
@@ -203,16 +193,14 @@ def jaccard_similar_pairs(df: DataFrame, id_col: str, text_col: str,
 
 def containment_pairs(df: DataFrame, id_col: str, text_col: str,
                       n: int = 3, threshold: float = 0.5,
-                      max_shingle_df: int | None = 1000,
-                      unique_ids: bool = True) -> DataFrame:
+                      max_shingle_df: int | None = 1000) -> DataFrame:
     """Subset/quote/boilerplate detection: pairs whose n-gram
     CONTAINMENT ``shared / min(|A|, |B|)`` ≥ threshold. Catches the
     asymmetric near-dups Jaccard misses — a short document fully
     quoted inside a long one has tiny Jaccard (union is dominated by
     the long doc) but containment ≈ 1. Same blocked candidate core as
     :func:`jaccard_similar_pairs` (:func:`blocked_pair_counts`)."""
-    pc = blocked_pair_counts(df, id_col, text_col, n, max_shingle_df,
-                             unique_ids)
+    pc = blocked_pair_counts(df, id_col, text_col, n, max_shingle_df)
     return (pc.withColumn("containment",
                           F.col("shared") / F.least("n_a", "n_b"))
             .filter(F.col("containment") >= threshold)
@@ -235,10 +223,10 @@ def _minhash_params(num_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                        n: int = 3, num_hashes: int = 64,
                        seed: int = 42) -> DataFrame:
-    """(id, signature array<long>) — k-permutation MinHash over n-word
-    shingles. One Arrow batch per partition chunk; the k affine
-    permutations (a·h + b mod 2^61-1) run as a vectorized numpy outer
-    product per document.
+    """(id, signature array<long>) — k-permutation MinHash over the
+    n-word shingles of :func:`normalize_text`. One Arrow batch per
+    partition chunk; the k affine permutations (a·h + b mod 2^61-1)
+    run as a vectorized numpy outer product per document.
 
     Documents with fewer than ``n`` words have an EMPTY shingle set and
     get a NULL signature — a shared sentinel (e.g. all-zeros) would make
@@ -251,7 +239,7 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
         a = a_params.astype(object)  # python ints: exact mod-2^61 math
         b = b_params.astype(object)
         for t in texts:
-            words = " ".join((t or "").lower().split()).split(" ")
+            words = (t or "").split(" ")
             shingles = {" ".join(words[i:i + n])
                         for i in range(max(0, len(words) - n + 1))}
             if not shingles:
@@ -264,7 +252,8 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
 
     from spark_ext_spark.sources.io import ensure_fanout
     return ensure_fanout(df, id_col).select(
-        F.col(id_col).alias("doc"), sig(F.col(text_col)).alias("signature"))
+        F.col(id_col).alias("doc"),
+        sig(normalize_text(text_col)).alias("signature"))
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
@@ -314,8 +303,9 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, 64-bit SimHash as long) — token-frequency-weighted majority
-    vote per bit; near-identical texts land within a few bits."""
+    """(id, 64-bit SimHash as long) — word-frequency-weighted majority
+    vote per bit over the words of :func:`normalize_text`;
+    near-identical texts land within a few bits."""
 
     @F.pandas_udf("long")
     def sh(texts: pd.Series) -> pd.Series:
@@ -326,8 +316,8 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         memo: dict[str, int] = {}  # vocab is Zipf-small vs token count
         out = []
         for t in texts:
-            words = " ".join((t or "").lower().split()).split(" ")
-            if not words or words == [""]:
+            words = (t or "").split(" ")
+            if words == [""]:
                 # empty docs carry no evidence: NULL, not a shared 0
                 # sentinel that would pair every empty doc at hamming 0
                 out.append(None)
@@ -355,7 +345,8 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     from spark_ext_spark.sources.io import ensure_fanout
     return ensure_fanout(df, id_col).select(
-        F.col(id_col).alias("doc"), sh(F.col(text_col)).alias("simhash"))
+        F.col(id_col).alias("doc"),
+        sh(normalize_text(text_col)).alias("simhash"))
 
 
 def simhash_bands(max_hamming: int) -> list[tuple[int, int]]:

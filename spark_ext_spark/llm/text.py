@@ -212,10 +212,10 @@ def language_id(df: DataFrame, id_col: str, text_col: str,
     two-level agg.
 
     ``carry_cols``: extra per-row columns to pass through to the
-    output (r12 optimization round). They ride the operator's OWN
-    final doc join — NOT the exploded token rows, which stay narrow —
-    so a caller that needs (lang_pred, source, …) per doc gets them
-    without a second doc-sized join back onto its input."""
+    output. They ride the operator's OWN final doc join — NOT the
+    exploded token rows, which stay narrow — so a caller that needs (lang_pred, source, …) per doc gets them
+    without a second doc-sized join back onto its input
+    (OPTIMIZATION_r12.md)."""
     profiles = profiles or STOPWORDS
     spark = df.sparkSession
     profile_rows = [(w, lang) for lang, ws in profiles.items() for w in ws]
@@ -354,8 +354,8 @@ def char_trigram_lm_scores(df: DataFrame, id_col: str, text_col: str,
 
     The normalized text is PROJECTED before the transform lambda (same
     rule as shingle_array): a lambda referencing the raw regexp
-    expression re-evaluates it per element — measured 34 s vs ~1 s at
-    sf0.1 for this query."""
+    expression re-evaluates it per element (measured in
+    OPTIMIZATION_r12.md)."""
     from spark_ext_spark.sources.io import ensure_fanout
     base = ensure_fanout(
         df.select(F.col(id_col), normalize_text(text_col).alias("__t")),
@@ -363,8 +363,8 @@ def char_trigram_lm_scores(df: DataFrame, id_col: str, text_col: str,
     t = F.col("__t")
     # explode the OFFSETS, then take trigrams with a plain substr
     # projection: substr(t, i, 3) with column args is whole-stage
-    # codegen, while a transform() lambda is interpreted — measured
-    # 2.2 s vs 1.5 s for this stage at sf0.1. when() guards len<3
+    # codegen, while a transform() lambda is interpreted (measured in
+    # OPTIMIZATION_r12.md). when() guards len<3
     # (sequence(1,0) would count DOWN, not produce empty).
     offsets = F.explode(F.when(
         F.length(t) >= 3, F.sequence(F.lit(1), F.length(t) - 2)))
@@ -404,7 +404,7 @@ def repeated_ngram_spans(df: DataFrame, id_col: str, text_col: str,
     Plan shape: tokenize → posexplode → per-document ``lead`` window
     builds each gram with ``concat_ws`` (whole-stage codegen; the
     equivalent in-row ``transform``+``slice`` array expressions are
-    interpreted and measured 4× slower at sf0.1) → hash-agg on the
+    interpreted and slower, OPTIMIZATION_r12.md) → hash-agg on the
     gram → HAVING filter → TakeOrderedAndProject. Two shuffles: the
     token stream once on the doc key (documents are length-bounded, so
     a doc's tokens always fit one task), then the map-side-combined

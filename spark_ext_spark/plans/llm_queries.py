@@ -27,7 +27,7 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EXACT_DEDUP_SQL = """
-SELECT sha256(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS digest,
+SELECT sha256(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' ')) AS digest,
        min(doc_id) AS canonical_id,
        count(*) AS n_members
 FROM documents
@@ -37,7 +37,7 @@ GROUP BY 1
 _SHINGLE_CTE = """
 WITH norm AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
+         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' '), ' ') AS w
   FROM documents
 ),
 sh_all AS (
@@ -127,7 +127,7 @@ def _minhash_lsh_oracle() -> str:
 WITH params(hi, a, b) AS (VALUES
     {params}),
 norm AS (
-  SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS t
+  SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' ') AS t
   FROM documents
 ),
 words AS (SELECT doc_id, string_split(t, ' ') AS w FROM norm),
@@ -193,7 +193,7 @@ def _simhash_pairs_oracle(max_hamming: int = 8) -> str:
 WITH bands(band, sh, mask) AS (VALUES
     {bands}),
 norm AS (
-  SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS t
+  SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' ') AS t
   FROM documents
 ),
 words AS (
@@ -279,7 +279,7 @@ WITH toks AS (
   FROM documents
 )
 SELECT doc_id,
-       md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint,
+       md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' ')) AS fingerprint,
        -- coalesce: DuckDB array_to_string([]) is NULL, Spark
        -- concat_ws of an empty array is '' — token-less docs
        -- fingerprint as md5(''); NULL text stays NULL on both engines
@@ -915,7 +915,7 @@ def _winnow_oracle(k: int = 4, window: int = 5,
 WITH norm AS (
   SELECT doc_id,
          string_split(trim(regexp_replace(lower(text), '\\s+', ' ',
-                                     'g')), ' ') AS w
+                                     'g'), ' '), ' ') AS w
   FROM documents
 ),
 hs AS (
@@ -1180,7 +1180,7 @@ WITH sh AS (
           FOR i IN generate_series(1, len(w) - 2)] AS s
   FROM (SELECT doc_id,
                string_split(trim(regexp_replace(lower(text),
-                                           '\\s+', ' ', 'g')), ' ') AS w
+                                           '\\s+', ' ', 'g'), ' '), ' ') AS w
         FROM documents)
 )
 SELECT doc_id,
@@ -1334,8 +1334,7 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval sets). Hashed-shingle equi-join — blocking, never quadratic;
     the benchmark side is tiny so it broadcasts."""
     docs = load(spark, sf_dir, "documents")
-    sh = dedup.word_shingles(docs, "doc_id", "text", n=5, hashed=True,
-                             unique_ids=True)
+    sh = dedup.word_shingles(docs, "doc_id", "text", n=5)
     bench = (sh.filter(F.col("doc") % 50 == 0)
              .select(F.col("shingle").alias("bshingle")).distinct())
     corpus = sh.filter(F.col("doc") % 50 != 0)
@@ -1358,7 +1357,7 @@ WITH sh AS (
   FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 4)) AS i
         FROM (SELECT doc_id,
                      string_split(trim(regexp_replace(lower(text),
-                                                 '\\s+', ' ', 'g')), ' ') AS w
+                                                 '\\s+', ' ', 'g'), ' '), ' ') AS w
               FROM documents)
         WHERE len(w) >= 5)
 ),
@@ -1510,7 +1509,7 @@ def doc_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DOC_LM_SCORES_SQL = """
 WITH norm AS (
-  SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS t
+  SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' ') AS t
   FROM documents
 ),
 tris AS (
@@ -1709,10 +1708,10 @@ CORPUS_DEDUP_STATS_SQL = """
 -- starting/ending in non-space whitespace (trim removes spaces only)
 SELECT count(*) AS n_docs,
        count(DISTINCT md5(trim(regexp_replace(lower(text),
-                                         '\\s+', ' ', 'g'))))
+                                         '\\s+', ' ', 'g'), ' ')))
            AS n_unique,
        round(1.0 - count(DISTINCT
-                 md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))))
+                 md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' ')))
              / count(*), 4) AS dup_rate,
        CAST(sum(length(text)) AS BIGINT) AS total_chars
 FROM documents

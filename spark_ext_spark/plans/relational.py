@@ -1172,11 +1172,11 @@ def doc_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DOC_SENTENCES_SQL = """
-SELECT doc_id, i - 1 AS pos, trim(parts[i]) AS sentence
+SELECT doc_id, i - 1 AS pos, trim(parts[i], ' ') AS sentence
 FROM (SELECT doc_id, string_split_regex(text, '[.!?]') AS parts
       FROM documents),
      LATERAL (SELECT unnest(generate_series(1, len(parts))) AS i)
-WHERE length(trim(parts[i])) > 0
+WHERE length(trim(parts[i], ' ')) > 0
 """
 
 

@@ -571,12 +571,15 @@ def test_randomized_unicode_docs_parity(spark, tmp_path_factory, seed):
     text/dedup battery. Caught two real defects on first run: the
     trim-before-collapse phantom '' token desyncing the Python
     (str.split) tokenizers from normalize_text, and quality_score's
-    0.3·4dp products landing on the .00005 round() half-grid."""
+    0.3·4dp products landing on the .00005 round() half-grid. The
+    U+00A0 and U+001C pieces pin the one word definition: Python's
+    str.split() and DuckDB's one-argument trim() treat them as
+    whitespace, Java's ``\\s`` and Spark's trim do not."""
     import random
     rng = random.Random(seed)
     pieces = ["hello", "world", "the", "é", "漢字", "😀", "a" * 300, "",
               " ", "\t", "Mr. X", "3.14", "http://a.b", "word,",
-              "dogs!", "ñó", "тест"]
+              "dogs!", "ñó", "тест", "a\u00a0b", "\u00a0", "x\u001cy"]
     rows = []
     for i in range(80):
         if rng.random() < 0.1:

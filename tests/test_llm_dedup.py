@@ -42,9 +42,17 @@ def test_exact_duplicates_groups(docs):
 
 
 def test_word_shingles(spark):
-    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-    got = {r["shingle"] for r in word_shingles(df, "doc_id", "text", 3).collect()}
-    assert got == {"a b c", "b c d"}
+    """One row per distinct shingle of the normalized words, each the
+    xxhash64 of its word triple."""
+    from pyspark.sql import functions as F
+    df = spark.createDataFrame([(1, "A  b c\td a b c")],
+                               "doc_id long, text string")
+    got = sorted(r["shingle"]
+                 for r in word_shingles(df, "doc_id", "text", 3).collect())
+    triples = ["abc", "bcd", "cda", "dab"]
+    want = spark.range(1).select(
+        *[F.xxhash64(*map(F.lit, t)) for t in triples]).first()
+    assert got == sorted(want)
     short = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
     assert word_shingles(short, "doc_id", "text", 3).count() == 0
 
@@ -120,6 +128,32 @@ def test_short_and_empty_docs_never_pair(spark):
           simhash_near_pairs(df, "doc_id", "text",
                              max_hamming=3).collect()}
     assert (3, 4) not in sp and (5, 6) in sp
+
+
+def test_dedup_job_pins(spark, docs, count_jobs):
+    """Spark jobs for plan build + collect() of the MinHash, SimHash
+    and Jaccard pair producers on the 5-doc fixture — the latency
+    floor of a small dedup. The pins equal the counts from before the
+    UDFs read normalize_text. MinHash and SimHash cache their
+    signature table with no handle to release it, so every count
+    starts from a cleared cache."""
+    runs = {
+        "minhash_lsh_pairs": lambda: minhash_lsh_pairs(
+            docs, "doc_id", "text").collect(),
+        "simhash_near_pairs": lambda: simhash_near_pairs(
+            docs, "doc_id", "text").collect(),
+        "jaccard_similar_pairs": lambda: jaccard_similar_pairs(
+            docs, "doc_id", "text").collect(),
+    }
+
+    def jobs(fn):
+        spark.catalog.clearCache()
+        docs.cache().count()   # materialized outside the count
+        return count_jobs(fn)
+
+    assert {name: jobs(fn) for name, fn in runs.items()} == {
+        "minhash_lsh_pairs": 9, "simhash_near_pairs": 5,
+        "jaccard_similar_pairs": 8}
 
 
 def test_simhash_bands_full_recall_past_hamming_3(spark):
@@ -290,8 +324,7 @@ def test_blocked_pair_counts_null_ids_dropped(spark):
     docs = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "a b c d e g"), (None, "a b c d e h")],
         "doc_id long, text string")
-    rows = blocked_pair_counts(docs, "doc_id", "text", n=3,
-                               unique_ids=False).collect()
+    rows = blocked_pair_counts(docs, "doc_id", "text", n=3).collect()
     assert {(r["doc_a"], r["doc_b"]) for r in rows} == {(1, 2)}
     assert all(r["doc_a"] is not None and r["doc_b"] is not None
                for r in rows)
@@ -313,7 +346,6 @@ def test_null_id_docs_do_not_count_toward_df_cap(spark):
         [(1, "s1 s2 s3"), (2, "s1 s2 s3 x"), (None, "s1 s2 s3 y")],
         "doc_id long, text string")
     rows = blocked_pair_counts(docs, "doc_id", "text", n=3,
-                               max_shingle_df=2,
-                               unique_ids=False).collect()
+                               max_shingle_df=2).collect()
     assert [(r["doc_a"], r["doc_b"], r["shared"], r["n_a"], r["n_b"])
             for r in rows] == [(1, 2, 1, 1, 2)]
